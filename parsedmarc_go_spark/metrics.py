@@ -15,8 +15,15 @@ for zero-extra-pass streaming counts:
 - `observed_ingest(files)`: attaches an Observation to the ingest scan
   so every action over the batch reports file/byte counts without a
   second pass (the streaming daemon's per-batch counters).
-- `to_prometheus_textfile(...)`: renders the node-exporter textfile
-  format, the standard drop-in for scrape-based setups.
+- `ingest_counters(res)`: the same two parse series as
+  {(name, labels): value} counters, reject reasons label-escaped —
+  what both `ingest_metrics` and the streaming daemon publish.
+- `render_prometheus_text(...)` / `write_metrics_textfile(...)`: the
+  one exposition renderer (TYPE once per family, histogram _sum/_count
+  inside their family) and its atomic tmp+rename publish;
+  `to_prometheus_textfile(...)` feeds metric-row frames through both
+  — the node-exporter textfile format, the standard drop-in for
+  scrape-based setups.
 
 Batch durations (`parsedmarc_parser_duration_seconds`) are a
 per-micro-batch property in Spark, not per-report; stream_ingest logs
@@ -26,6 +33,7 @@ them via StreamingQuery progress (`lastProgress["durationMs"]`), which
 
 from __future__ import annotations
 
+import re
 import time
 from typing import Iterable
 
@@ -42,35 +50,37 @@ def _rows_df(spark: SparkSession, rows: list[tuple[str, str, float]]) -> DataFra
     return spark.createDataFrame(rows, METRIC_SCHEMA)
 
 
-def ingest_metrics(res, source: str = "file") -> DataFrame:
-    """Metric rows for one ingest pass. Counts come from the SAME
-    frames the caller writes, so the numbers are exactly the accept/
-    reject matrix (asserted against test_ingest_samples)."""
-    spark = res.rejects.sparkSession
-    rows: list[tuple[str, str, float]] = []
+def ingest_counters(res, source: str = "file") -> dict[tuple[str, str], float]:
+    """The reference's two parse series for one IngestResult as
+    {(metric_name, label_string): value}: reports per family and
+    failures per (kind, reason). Reject reasons are free-form parser
+    errors (extract_payload stores the exception text), so the reason
+    label is escaped. One definition for the batch metric rows
+    (ingest_metrics) and the streaming daemon's per-batch counters."""
+    out: dict[tuple[str, str], float] = {}
     for family, df in (
         ("aggregate", res.aggregate_reports),
         ("forensic", res.forensic_reports),
         ("smtp_tls", res.smtp_tls_reports),
     ):
-        rows.append(
-            (
-                "parsedmarc_parser_reports_total",
-                f'type="{family}",source="{source}"',
-                float(df.count()),
-            )
+        key = ("parsedmarc_parser_reports_total", f'type="{family}",source="{source}"')
+        out[key] = float(df.count())
+    for r in res.rejects.groupBy("kind", "error").count().collect():
+        key = (
+            "parsedmarc_parser_failures_total",
+            f'type="{r["kind"]}",source="{source}",'
+            f'reason="{escape_label_value(r["error"] or "")}"',
         )
-    for r in (
-        res.rejects.groupBy("kind", "error").count().collect()
-    ):
-        rows.append(
-            (
-                "parsedmarc_parser_failures_total",
-                f'type="{r.kind}",source="{source}",reason="{r["error"]}"',
-                float(r["count"]),
-            )
-        )
-    return _rows_df(spark, rows)
+        out[key] = out.get(key, 0.0) + r["count"]
+    return out
+
+
+def ingest_metrics(res, source: str = "file") -> DataFrame:
+    """Metric rows for one ingest pass. Counts come from the SAME
+    frames the caller writes, so the numbers are exactly the accept/
+    reject matrix (asserted against test_ingest_samples)."""
+    rows = [(n, lbl, v) for (n, lbl), v in ingest_counters(res, source).items()]
+    return _rows_df(res.rejects.sparkSession, rows)
 
 
 def size_histogram(files: DataFrame, length_col: str = "length") -> DataFrame:
@@ -144,20 +154,35 @@ def escape_label_value(value: str) -> str:
 
 
 def render_prometheus_text(totals: dict[tuple[str, str], float]) -> str:
-    """{(metric_name, label_string): value} → exposition-format text.
-    The no-Spark renderer for process-local counters (the streaming
-    daemon's cumulative per-batch totals)."""
+    """{(metric_name, label_string): value} → exposition-format text,
+    the one renderer behind every textfile this package publishes.
+
+    TYPE is declared once per metric FAMILY: a histogram is exposed as
+    <base>_bucket{le=...}/<base>_sum/<base>_count but typed as
+    `# TYPE <base> histogram` (round-4 advice), so _sum/_count samples
+    whose <base>_bucket is present belong to that family, not to
+    counters of their own. Samples are grouped by family, buckets in
+    ascending ``le`` order."""
+    hists = {n[: -len("_bucket")] for n, _ in totals if n.endswith("_bucket")}
+
+    def family(name: str) -> str:
+        for suffix in ("_bucket", "_sum", "_count"):
+            if name.endswith(suffix) and name[: -len(suffix)] in hists:
+                return name[: -len(suffix)]
+        return name
+
+    def order(item):
+        (name, labels), _ = item
+        le = re.search(r'le="([^"]*)"', labels)
+        return family(name), name, float(le.group(1)) if le else 0.0, labels
+
     lines: list[str] = []
     seen: set[str] = set()
-    for (name, labels), value in sorted(totals.items()):
-        # TYPE must be declared on the BASE metric name: histogram series
-        # are exposed as <base>_bucket{le=...}/_sum/_count but typed as
-        # `# TYPE <base> histogram` (round-4 advice).
-        base = name[: -len("_bucket")] if name.endswith("_bucket") else name
+    for (name, labels), value in sorted(totals.items(), key=order):
+        base = family(name)
         if base not in seen:
             seen.add(base)
-            kind = "histogram" if name.endswith("_bucket") else "counter"
-            lines.append(f"# TYPE {base} {kind}")
+            lines.append(f"# TYPE {base} {'histogram' if base in hists else 'counter'}")
         label_part = "{" + labels + "}" if labels else ""
         v = int(value) if float(value).is_integer() else value
         lines.append(f"{name}{label_part} {v}")
@@ -165,32 +190,27 @@ def render_prometheus_text(totals: dict[tuple[str, str], float]) -> str:
 
 
 def write_metrics_textfile(totals: dict[tuple[str, str], float], path: str) -> None:
-    """Atomically publish counter totals where a scraper (or the HTTP
-    receiver's /metrics bridge) reads them — tmp + rename so a
-    concurrent reader never sees a torn file."""
+    """Atomically publish counter totals where a scraper (a
+    node-exporter textfile collector, or the HTTP receiver's /metrics
+    bridge) reads them — tmp + rename so a concurrent reader never sees
+    a torn file. A trailing comment stamps when the file was written."""
     import os
 
     tmp = f"{path}.tmp"
     with open(tmp, "w", encoding="utf-8") as f:
-        f.write(render_prometheus_text(totals))
+        f.write(render_prometheus_text(totals) + f"# EOF written_at={int(time.time())}\n")
     os.replace(tmp, path)
 
 
 def to_prometheus_textfile(metric_dfs: Iterable[DataFrame], path: str) -> None:
-    """Render metric rows in the Prometheus textfile-collector format
-    (the file a node-exporter picks up — the scrape-less equivalent of
-    the reference's /metrics endpoint)."""
-    lines: list[str] = []
-    seen_names: set[str] = set()
+    """Publish metric-row frames (ingest_metrics, size_histogram, …) in
+    the Prometheus textfile-collector format — the scrape-less
+    equivalent of the reference's /metrics endpoint — through
+    render_prometheus_text and write_metrics_textfile. Rows with the
+    same series across frames add up, as counters do."""
+    totals: dict[tuple[str, str], float] = {}
     for df in metric_dfs:
         for r in df.collect():
-            if r.name not in seen_names:
-                seen_names.add(r.name)
-                kind = "histogram" if r.name.endswith("_bucket") else "counter"
-                lines.append(f"# TYPE {r.name} {kind}")
-            label_part = "{" + r.labels + "}" if r.labels else ""
-            value = int(r.value) if float(r.value).is_integer() else r.value
-            lines.append(f"{r.name}{label_part} {value}")
-    lines.append(f"# EOF written_at={int(time.time())}")
-    with open(path, "w", encoding="utf-8") as f:
-        f.write("\n".join(lines) + "\n")
+            key = (r.name, r.labels or "")
+            totals[key] = totals.get(key, 0.0) + r.value
+    write_metrics_textfile(totals, path)

@@ -35,17 +35,12 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # k*dim above which the literal-centroid plan gets unwieldy and a
 # broadcast-join assignment should take over (see module docstring)
 LITERAL_CENTROID_BUDGET = 65536
-
-
-def _centroid_literal(cents: list[list[float]]) -> Column:
-    """The k×dim matrix as a literal array<array<double>> column."""
-    return F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cents])
 
 
 def _assign_expr(cents: list[list[float]], vec_col: str) -> str:
@@ -232,8 +227,8 @@ def build_ivf_index(
     ``quantize=True`` stores the residing vectors int8-quantized
     (IVF-SQ8: cell assignment still happens on the full-precision
     vectors, only the STORED copy is compressed) — a 4× smaller index;
-    probes dequantize transparently (the readers detect the quantized
-    layout) at the bound-tested ≤0.005 cosine distortion."""
+    probes score the codes directly (ivf_topk_indexed detects the
+    quantized layout) at the bound-tested ≤0.005 cosine distortion."""
     if n_cells is None:
         n = vectors.count()
         n_cells = max(8, min(4096, int(math.sqrt(n))))
@@ -291,127 +286,49 @@ def compact_ivf_index(spark, path: str, target_file_mb: int = 256) -> tuple[int,
     return compact_partitioned_index(spark, path, "cell", target_file_mb)
 
 
-def _read_ivf_corpus(spark, path: str, vec_col: str):
-    """Open an IVF index directory, transparently dequantizing an
-    IVF-SQ8 layout (embedding_q + q_scale) back to ``vec_col``."""
-    df = spark.read.parquet(path)
-    if "embedding_q" in df.columns and vec_col not in df.columns:
-        from parsedmarc_go_spark.operators.similarity import dequantize_embeddings
-
-        df = dequantize_embeddings(df, out_col=vec_col).drop("embedding_q", "q_scale")
-    return df
-
-
 def load_ivf_centroids(spark, path: str) -> list[list[float]]:
     rows = spark.read.parquet(path.rstrip("/") + ".centroids").orderBy("cell").collect()
     return [list(r["centroid"]) for r in rows]
 
 
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query: DataFrame,
-    k: int = 10,
-    nprobe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cents: list[list[float]] | None = None,
-) -> DataFrame:
-    """Probe a PERSISTED IVF index (see build_ivf_index): rank cells by
-    centroid·query on the driver (k×dim floats, zero Spark jobs), read
-    back the partitioned corpus filtered to the nprobe nearest cells —
-    Catalyst turns the ``cell IN (…)`` predicate on the partition column
-    into PartitionFilters, so non-probed cells contribute no input
-    splits at all (plan-asserted in tests/test_kmeans.py) — then exact
-    top-k within the probed slice."""
-    from parsedmarc_go_spark.operators.similarity import brute_force_topk
-
-    if cents is None:
-        cents = load_ivf_centroids(spark, path)
-    (qrow,) = query.collect()
-    qv = _unit(list(qrow.q))
-    ranked = sorted(
-        range(len(cents)),
-        key=lambda i: (-sum(a * b for a, b in zip(cents[i], qv)), i),
+def _rank_cells(cents: list[list[float]], q) -> list[int]:
+    """Cell ids by descending centroid·unit(q), ties to the lower id —
+    the driver-side IVF probe order (k×dim floats, zero Spark jobs)."""
+    qv = _unit(list(q))
+    return sorted(
+        range(len(cents)), key=lambda i: (-sum(a * b for a, b in zip(cents[i], qv)), i)
     )
-    probed = [int(i) for i in ranked[:nprobe]]
-    raw = spark.read.parquet(path)
-    if "embedding_q" in raw.columns and vec_col not in raw.columns:
-        # IVF-SQ8: score the tinyint codes directly — the per-vector
-        # scale cancels in cosine, so no array<double> dequantization
-        # buffer is ever materialized (8× the stored bytes per probed
-        # row at large cells; see brute_force_topk_q)
-        from parsedmarc_go_spark.operators.similarity import brute_force_topk_q
-
-        corpus = raw.filter(F.col("cell").isin(probed)).drop("cell")
-        return brute_force_topk_q(corpus, query, k, id_col)
-    corpus = _read_ivf_corpus(spark, path, vec_col).filter(
-        F.col("cell").isin(probed)
-    ).drop("cell")
-    return brute_force_topk(corpus, query, k, id_col, vec_col)
 
 
-def ivf_topk_batch(
+def ivf_topk_indexed(
     spark,
     path: str,
     queries: DataFrame,
     k: int = 10,
     nprobe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cents: list[list[float]] | None = None,
 ) -> DataFrame:
-    """Batch probe of a persisted IVF index — top-k for a whole
-    (query_id, q) table in ONE job, the shape a retrieval pipeline
-    actually runs (per-query jobs pay a scheduler round trip each).
-
-    Cell ranking stays driver-side (Q query vectors × the k×dim
-    centroid matrix — no Spark job), producing a broadcast
-    (query_id, cell, q) probe table of Q·nprobe rows. The corpus read
-    is filtered to the UNION of probed cells (``cell IN (…)`` on the
-    partition column → PartitionFilters, same pruning as the per-query
-    probe), the equi-join on cell hands each candidate row to exactly
-    the queries probing its cell, and ranking is one row_number window
-    over candidates partitioned by query_id. Per-query results pinned
-    identical to ivf_topk_indexed in tests/test_kmeans.py."""
-    from pyspark.sql import Window
-
-    from parsedmarc_go_spark.operators.similarity import cosine
+    """Probe a PERSISTED IVF index (see build_ivf_index) for a
+    (query_id, q) batch — a single query is a batch of one
+    (similarity.query_vector). The bounded batch is collected and each
+    query's nprobe nearest cells are ranked on the driver
+    (_rank_cells); similarity._probe_index then reads the partitioned
+    corpus once, filtered to the union of probed cells — Catalyst turns
+    the ``cell IN (…)`` predicate on the partition column into
+    PartitionFilters, so non-probed cells contribute no input splits at
+    all (plan-asserted in tests/test_kmeans.py) — and ranks exact top-k
+    per query. An IVF-SQ8 index is scored on its int8 codes directly,
+    with no dequantization buffer. ``cents`` skips the sidecar read."""
+    from parsedmarc_go_spark.operators.similarity import _probe_index
 
     if cents is None:
         cents = load_ivf_centroids(spark, path)
-    qrows = queries.collect()  # bounded query batch, driver-side by design
-    probe_rows = []
-    for r in qrows:
-        qv = _unit(list(r["q"]))
-        ranked = sorted(
-            range(len(cents)),
-            key=lambda i: (-sum(a * b for a, b in zip(cents[i], qv)), i),
-        )
-        for c in ranked[:nprobe]:
-            probe_rows.append((int(r["query_id"]), int(c), [float(x) for x in r["q"]]))
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, cell int, q array<double>"
-    )
-    all_cells = sorted({c for _, c, _ in probe_rows})
-    corpus = _read_ivf_corpus(spark, path, vec_col).filter(F.col("cell").isin(all_cells))
-    scored = (
-        corpus.join(F.broadcast(probes), "cell")
-        .select(
-            "query_id",
-            id_col,
-            "label",
-            F.round(
-                cosine(f"transform({vec_col}, x -> CAST(x AS DOUBLE))", "q"), 4
-            ).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    rows = [
+        (int(r["query_id"]), c, [float(x) for x in r["q"]])
+        for r in queries.select("query_id", "q").collect()
+        for c in _rank_cells(cents, r["q"])[:nprobe]
+    ]
+    return _probe_index(spark, [(path, "cell", rows)], k)
 
 
 def ivf_topk_trained(
@@ -440,12 +357,7 @@ def ivf_topk_trained(
         vectors, k=n_cells, max_iters=max_iters, vec_col=vec_col, id_col=id_col
     )
     (qrow,) = query.collect()  # single query vector, driver-side like the centroids
-    qv = _unit(list(qrow.q))
-    ranked = sorted(
-        range(len(cents)),
-        key=lambda i: (-sum(a * b for a, b in zip(cents[i], qv)), i),
-    )
-    probed = ranked[:nprobe]
+    probed = _rank_cells(cents, qrow.q)[:nprobe]
     pruned = (
         assign_cells(vectors, cents, vec_col, "__cell")
         .filter(F.col("__cell").isin(probed))

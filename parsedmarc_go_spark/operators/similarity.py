@@ -2,6 +2,9 @@
 
 - brute-force cosine top-k (the correctness baseline),
 - IVF-style probed search (coarse centroids → search nearest cells),
+- hyperplane-LSH top-k for a query batch, ad-hoc (lsh_topk) or over a
+  persisted bucket-partitioned index (lsh_topk_indexed; the IVF twin is
+  clustering.ivf_topk_indexed) — all three end in _score_and_rank,
 - cosine near-dup pairs blocked on a partition column.
 
 Dot products / norms are higher-order-function expressions over the
@@ -12,6 +15,8 @@ to nprobe/ncells.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -73,6 +78,17 @@ def brute_force_topk_q(
     yields the same 0/0 → NaN as the dequantized path. Ranking
     agreement with dequantize-then-score is pinned in test_kmeans
     (differences are below the 4-decimal rounding both paths share)."""
+    scored = (
+        vectors.select(id_col, "label", q_col)
+        .crossJoin(F.broadcast(query))
+        .select(id_col, "label", F.round(_cosine_codes(q_col), 4).alias("cosine_sim"))
+    )
+    return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
+
+
+def _cosine_codes(q_col: str) -> Column:
+    """Cosine of int8 codes ``q_col`` against the double query ``q``
+    with the per-vector scale cancelled (see brute_force_topk_q)."""
     dotq = F.expr(
         f"aggregate(zip_with({q_col}, q, (x, y) -> CAST(x AS DOUBLE) * y), "
         "0D, (acc, x) -> acc + x)"
@@ -80,21 +96,15 @@ def brute_force_topk_q(
     s2 = F.expr(
         f"aggregate({q_col}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
     )
-    scored = (
-        vectors.select(id_col, "label", q_col)
-        .crossJoin(F.broadcast(query))
-        .select(
-            id_col,
-            "label",
-            F.round(dotq / (F.sqrt(s2) * norm("q")), 4).alias("cosine_sim"),
-        )
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
+    return dotq / (F.sqrt(s2) * norm("q"))
 
 
 def query_vector(vectors: DataFrame, vec_id: int, vec_col: str = "embedding") -> DataFrame:
+    """Vector ``vec_id`` as a (query_id, q) batch of one — the query
+    shape every ANN probe takes (query_id = vec_id)."""
     return vectors.filter(F.col("vec_id") == vec_id).select(
-        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("q")
+        F.col("vec_id").alias("query_id"),
+        F.expr(f"transform({vec_col}, x -> CAST(x AS DOUBLE))").alias("q"),
     )
 
 
@@ -446,124 +456,168 @@ def hamming_probe_buckets(bucket: int, n_planes: int, multiprobe: int) -> list[i
     return out
 
 
-def lsh_bucketed_topk(
-    vectors: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    n_planes: int = 6,
-    multiprobe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """LSH-bucketed ANN: search the query's hyperplane bucket, plus —
-    with ``multiprobe`` = m > 0 — every bucket within Hamming distance
-    m of it (a neighbor across one hyperplane is one bit-flip away; see
-    hamming_probe_buckets). The scale path when no natural IVF cells
-    exist — with the corpus written partitioned by bucket id, the probe
-    is partition pruning. Recall is tunable on two axes: n_planes
-    (fewer planes → bigger buckets) and multiprobe (more buckets per
-    query); measured recall@10 for the grid lives in SCALE.md.
+def _score_and_rank(cands: DataFrame, k: int) -> DataFrame:
+    """The one score-and-rank every ANN probe ends in. ``cands`` holds
+    (query_id, vec_id, label, embedding | embedding_q, q) candidate
+    rows; each is scored by cosine against its own query ``q``, rounded
+    to 4 decimals, and the top k per query_id survive with the id as
+    tie-break, so the k-th boundary is deterministic and a query's
+    result never depends on which other queries share its batch.
 
-    The probe predicate is bit_count(hp_bucket ^ q_bucket) <= m —
-    pure codegen'd integer ops against the broadcast 1-row query, no
-    bucket enumeration needed on the ad-hoc (unpartitioned) path."""
-    bucketed = with_hyperplane_buckets(vectors, n_planes, vec_col)
-    qb = with_hyperplane_buckets(query.select(F.col("q").alias(vec_col)), n_planes, vec_col)
-    q_with_bucket = qb.select(F.col(vec_col).alias("q"), F.col("hp_bucket").alias("q_bucket"))
-    probe_cond = (
-        F.expr(f"bit_count(hp_bucket ^ q_bucket) <= {int(multiprobe)}")
-        if multiprobe > 0
-        else F.col("hp_bucket") == F.col("q_bucket")
+    On an IVF-SQ8 layout (``embedding_q`` codes, no ``embedding``) the
+    int8 codes are scored directly — the per-vector scale cancels in
+    cosine (see brute_force_topk_q), so no dequantized array<double>
+    is materialized and ``q_scale`` is never read.
+
+    Ranking is one row_number window over query_id; Spark plans the
+    ``rank <= k`` filter as a map-side WindowGroupLimit, so at most k
+    rows per query and partition reach the shuffle."""
+    sim = (
+        cosine("transform(embedding, x -> CAST(x AS DOUBLE))", "q")
+        if "embedding" in cands.columns
+        else _cosine_codes("embedding_q")
     )
-    pruned = bucketed.join(F.broadcast(q_with_bucket), probe_cond, "inner").select(
-        id_col, "label", F.col(vec_col), "q"
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
+    return (
+        cands.select("query_id", "vec_id", "label", F.round(sim, 4).alias("cosine_sim"))
+        .withColumn("__rank", F.row_number().over(w))
+        .filter(F.col("__rank") <= k)
+        .drop("__rank")
     )
-    scored = pruned.select(
-        id_col,
-        "label",
-        F.round(cosine(f"transform({vec_col}, x -> CAST(x AS DOUBLE))", "q"), 4).alias("cosine_sim"),
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
 
 
-def lsh_topk_batch(
+def _probe_index(spark, tables: list[tuple[str, str, list[tuple]]], k: int) -> DataFrame:
+    """The persisted-index probe shared by LSH and IVF. ``tables`` lists
+    (data directory, partition column, probe rows) per index table; a
+    probe row is (query_id, partition key, q), one per key the driver
+    chose for that query. Each table is read ONCE, filtered to the
+    union of its probed keys — ``key IN (…)`` on the partition column
+    lands in PartitionFilters, so unprobed directories contribute no
+    input splits — and a broadcast equi-join on the key hands each
+    candidate to exactly the queries that probed its directory. A
+    candidate found through several tables of a multi-table index is
+    kept once per query before ranking.
+
+    The probe rows go in through pandas: with Arrow enabled (the
+    session default) that plans as a local relation, where a Python
+    list becomes an RDD scan — measured 0.3 s more per probe at sf0.1
+    on 4 cores."""
+    import pandas as pd
+
+    parts = []
+    for path, key, rows in tables:
+        probes = spark.createDataFrame(
+            pd.DataFrame(rows, columns=["query_id", key, "q"]),
+            f"query_id long, {key} long, q array<double>",
+        )
+        parts.append(
+            spark.read.parquet(path)
+            .filter(F.col(key).isin(sorted({r[1] for r in rows})))
+            .join(F.broadcast(probes), key)
+            .drop(key)
+        )
+    cands = reduce(DataFrame.unionByName, parts)
+    if len(parts) > 1:
+        cands = cands.dropDuplicates(["query_id", "vec_id"])
+    return _score_and_rank(cands, k)
+
+
+def lsh_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 10,
     n_planes: int = 6,
+    n_tables: int = 1,
     multiprobe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Batch LSH ANN: top-k per query for a whole (query_id, q) table in
-    ONE job — the shape a 100 TB retrieval pipeline actually runs
-    (queries arrive in batches; per-query jobs waste a scheduler round
-    trip each). The query table is broadcast (bounded batch) and the
-    probe joins on Hamming distance ≤ multiprobe; ranking is one
-    row_number window partitioned by query_id, shuffling candidates
-    only — candidate count per query is the same bucket-bounded set the
-    per-query operator scans, so the shuffle is tiny relative to the
-    corpus. Per-query results are pinned identical to lsh_bucketed_topk
-    in tests."""
-    bucketed = with_hyperplane_buckets(vectors, n_planes, vec_col)
-    qb = with_hyperplane_buckets(
-        queries.select("query_id", F.col("q").alias(vec_col)), n_planes, vec_col
-    ).select("query_id", F.col(vec_col).alias("q"), F.col("hp_bucket").alias("q_bucket"))
-    probe_cond = F.expr(f"bit_count(hp_bucket ^ q_bucket) <= {int(multiprobe)}")
-    scored = (
-        bucketed.join(F.broadcast(qb), probe_cond, "inner")
-        .select(
-            "query_id",
-            id_col,
-            "label",
-            F.round(cosine(f"transform({vec_col}, x -> CAST(x AS DOUBLE))", "q"), 4).alias(
-                "cosine_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
-    )
+    """Ad-hoc hyperplane-LSH ANN for a (query_id, q) batch — a single
+    query is a batch of one (query_vector). A vector is a candidate for
+    a query when, in ANY of ``n_tables`` disjoint plane families
+    (plane_offset t·n_planes), its bucket lies within Hamming distance
+    ``multiprobe`` of the query's: a neighbor across m hyperplanes is m
+    bit-flips away (hamming_probe_buckets), and OR-amplification over L
+    tables lifts a per-table collision probability p to 1-(1-p)^L for
+    ~L× the scan instead of shrinking planes, which inflates EVERY
+    bucket. Measured recall@10 and scan fraction for the grid live in
+    SCALE.md / RECALL.json.
+
+    Plan shape: ONE corpus scan computing all L bucket expressions
+    (codegen'd integer math), one broadcast of the query batch carrying
+    its L buckets, an OR-of-bit_count join predicate, then
+    _score_and_rank over the candidates — no per-table scans, no union,
+    no shuffle of the corpus beyond the spread below.
+
+    The corpus is hash-spread first when it arrives in fewer partitions
+    than the cluster has slots (round 13): the L×n_planes hyperplane
+    dot products are HOF lambdas — 32 of them × 64 dims is ~2k
+    interpreted multiply-adds per vector — and a single-parquet-file
+    scan ran all of it on ONE partition (~25 s serial at sf1 for work
+    that parallelizes embarrassingly)."""
+    sc = vectors.sparkSession.sparkContext
+    if vectors.rdd.getNumPartitions() < sc.defaultParallelism:
+        vectors = vectors.repartition(F.col("vec_id"))
+    qb = queries.select("query_id", F.col("q").alias("embedding"))
+    for t in range(n_tables):
+        vectors = with_hyperplane_buckets(vectors, n_planes, "embedding", f"__b{t}", t * n_planes)
+        qb = with_hyperplane_buckets(qb, n_planes, "embedding", f"__qb{t}", t * n_planes)
+    hit = " OR ".join(f"bit_count(__b{t} ^ __qb{t}) <= {int(multiprobe)}" for t in range(n_tables))
+    cands = vectors.join(F.broadcast(qb.withColumnRenamed("embedding", "q")), F.expr(hit))
+    return _score_and_rank(cands, k)
 
 
-def build_lsh_index(vectors: DataFrame, path: str, n_planes: int = 6, vec_col: str = "embedding") -> None:
-    """Build-once for hyperplane LSH (the SCALE.md path that collapses
-    `ann_lsh_topk`'s per-query re-hash of the corpus): persist
-    with_hyperplane_buckets output ``partitionBy(hp_bucket)`` so a
-    probe reads ONLY the query's bucket directory via partition
-    pruning. ``n_planes`` is stored beside the data — the planes are
-    derived from seedless hashes, so bucket ids reproduce in any later
-    session from that one integer."""
-    with_hyperplane_buckets(vectors, n_planes, vec_col).write.mode(
-        "overwrite"
-    ).partitionBy("hp_bucket").parquet(path)
-    spark = vectors.sparkSession
-    (
-        spark.createDataFrame([(n_planes,)], "n_planes int")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path.rstrip("/") + ".meta")
-    )
+def _lsh_tables(path: str, n_tables: int | None) -> list[str]:
+    """Data directories of an LSH index: ``path`` itself for the
+    single-table layout (a ``.meta`` without n_tables), one
+    ``path/table=<t>`` per table otherwise."""
+    base = path.rstrip("/")
+    return [base] if n_tables is None else [f"{base}/table={t}" for t in range(n_tables)]
 
 
-def append_to_lsh_index(vectors: DataFrame, path: str, vec_col: str = "embedding") -> None:
-    """Incremental maintenance for a build_lsh_index index: bucket the
-    NEW vectors with the stored plane count and append their rows to
-    the same partition layout. Because the planes are derived from
-    seedless hashes, an appended index is bit-identical in bucket
-    assignment to a full rebuild over the union (pinned in
-    test_ann_recall) — so a 100 TB corpus takes daily increments
-    without ever re-hashing the existing data. Dynamic partition
-    overwrite is NOT used: append adds files inside existing bucket
-    directories, never touching other buckets' files."""
-    spark = vectors.sparkSession
+def _read_lsh_meta(spark, path: str) -> tuple[int, list[str]]:
+    """(n_planes, data directories) from an LSH index's ``.meta``."""
     (meta,) = spark.read.parquet(path.rstrip("/") + ".meta").collect()
-    with_hyperplane_buckets(vectors, int(meta["n_planes"]), vec_col).write.mode(
-        "append"
-    ).partitionBy("hp_bucket").parquet(path)
+    return int(meta["n_planes"]), _lsh_tables(path, meta.asDict().get("n_tables"))
+
+
+def _write_lsh_tables(vectors: DataFrame, n_planes: int, tables: list[str], mode: str) -> None:
+    for t, table in enumerate(tables):
+        bucketed = with_hyperplane_buckets(vectors, n_planes, "embedding", "hp_bucket", t * n_planes)
+        bucketed.write.mode(mode).partitionBy("hp_bucket").parquet(table)
+
+
+def build_lsh_index(vectors: DataFrame, path: str, n_planes: int = 6, n_tables: int = 1) -> None:
+    """Build-once for hyperplane LSH (the SCALE.md path that collapses
+    lsh_topk's per-batch re-hash of the corpus): persist
+    with_hyperplane_buckets output ``partitionBy(hp_bucket)`` — at
+    ``path`` for one table, under ``path/table=<t>`` (plane family
+    t·n_planes) for ``n_tables`` > 1, L× the corpus in storage, the
+    classic multi-table trade — so a probe reads ONLY the probed bucket
+    directories via partition pruning. ``n_planes`` (and n_tables, for
+    the multi-table layout) is stored in ``path.meta``: the planes are
+    derived from seedless hashes, so bucket ids reproduce in any later
+    session from those integers."""
+    multi = n_tables > 1
+    _write_lsh_tables(vectors, n_planes, _lsh_tables(path, n_tables if multi else None), "overwrite")
+    meta = (
+        vectors.sparkSession.createDataFrame([(n_planes, n_tables)], "n_planes int, n_tables int")
+        if multi
+        else vectors.sparkSession.createDataFrame([(n_planes,)], "n_planes int")
+    )
+    meta.coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + ".meta")
+
+
+def append_to_lsh_index(vectors: DataFrame, path: str) -> None:
+    """Incremental maintenance for a build_lsh_index index (either
+    layout): bucket the NEW vectors with the stored plane count and
+    append their rows to every table's partition layout. Because the
+    planes are derived from seedless hashes, an appended index is
+    bit-identical in bucket assignment to a full rebuild over the union
+    (pinned in test_ann_recall) — so a 100 TB corpus takes daily
+    increments without ever re-hashing the existing data. Dynamic
+    partition overwrite is NOT used: append adds files inside existing
+    bucket directories, never touching other buckets' files."""
+    n_planes, tables = _read_lsh_meta(vectors.sparkSession, path)
+    _write_lsh_tables(vectors, n_planes, tables, "append")
 
 
 def compact_lsh_index(spark, path: str, target_file_mb: int = 256) -> tuple[int, int]:
@@ -571,19 +625,13 @@ def compact_lsh_index(spark, path: str, target_file_mb: int = 256) -> tuple[int,
     append_to_lsh_index): collapse each hp_bucket directory's append
     spray back to one chunky file per bucket, preserving the
     partitionBy("hp_bucket") layout and the .meta sidecar. A
-    multi-table index (build_lsh_index_multitable) compacts each
-    table=<t> copy independently — same layout contract per table.
-    Returns summed (files_before, files_after)."""
+    multi-table index compacts each table=<t> copy independently —
+    same layout contract per table. Returns summed (files_before,
+    files_after)."""
     from parsedmarc_go_spark.storage import compact_partitioned_index
 
-    (meta,) = spark.read.parquet(path.rstrip("/") + ".meta").collect()
-    tables = (
-        [f"{path.rstrip('/')}/table={t}" for t in range(int(meta["n_tables"]))]
-        if "n_tables" in meta.asDict()
-        else [path]
-    )
     before, after = 0, 0
-    for t in tables:
+    for t in _read_lsh_meta(spark, path)[1]:
         b, a = compact_partitioned_index(spark, t, "hp_bucket", target_file_mb)
         before, after = before + b, after + a
     return before, after
@@ -592,211 +640,39 @@ def compact_lsh_index(spark, path: str, target_file_mb: int = 256) -> tuple[int,
 def lsh_topk_indexed(
     spark,
     path: str,
-    query: DataFrame,
-    k: int = 10,
-    multiprobe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a PERSISTED LSH index (see build_lsh_index): recompute the
-    query's bucket with the stored plane count, then exact top-k over
-    just the probed partition directories — with ``multiprobe`` = m the
-    probe set is the Hamming-≤m flip neighborhood of the query bucket
-    (hamming_probe_buckets), enumerated driver-side so the
-    ``hp_bucket IN (…)`` predicate lands in PartitionFilters
-    (plan-asserted in test_dedup); non-probed buckets contribute no
-    input splits. m=0 results are identical to the ad-hoc
-    lsh_bucketed_topk at the same n_planes."""
-    (meta,) = spark.read.parquet(path.rstrip("/") + ".meta").collect()
-    n_planes = int(meta["n_planes"])
-    qb = with_hyperplane_buckets(
-        query.select(F.col("q").alias(vec_col)), n_planes, vec_col
-    )
-    (qrow,) = qb.collect()  # one row, driver-side — zero jobs over the corpus
-    probes = hamming_probe_buckets(int(qrow["hp_bucket"]), n_planes, multiprobe)
-    corpus = (
-        spark.read.parquet(path)
-        .filter(F.col("hp_bucket").isin(probes))
-        .drop("hp_bucket")
-    )
-    return brute_force_topk(corpus, query, k, id_col, vec_col)
-
-
-def lsh_topk_multitable(
-    vectors: DataFrame,
-    query: DataFrame,
-    k: int = 10,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    multiprobe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ensure_parallelism: bool = True,
-) -> DataFrame:
-    """OR-amplified LSH ANN: L independent hyperplane tables (disjoint
-    plane families via plane_offset), a vector is a candidate if it
-    collides with the query in ANY table. The standard construction for
-    high recall at low scan — a true neighbor colliding with
-    probability p per table survives with 1-(1-p)^L overall, while
-    random non-neighbors stay improbable in every table, so the scan
-    budget grows only ~L×bucket instead of shrinking planes (which
-    inflates EVERY bucket). Measured against the single-table grid in
-    SCALE.md.
-
-    Plan shape: ONE corpus scan computing all L bucket expressions
-    (codegen'd integer math), one broadcast of the 1-row query carrying
-    its L buckets, an OR-of-bit_count join predicate, then exact top-k
-    over the union candidate set — no per-table scans, no union nodes,
-    no shuffle of the corpus. The at-rest layout for the indexed
-    variant is one partitioned copy per table (build_lsh_index per
-    plane_offset); probe cost there is L partition-pruned reads.
-
-    The corpus scan is hash-spread first when it arrives in fewer
-    partitions than the cluster has slots (round 13): the L×n_planes
-    hyperplane dot products are HOF lambdas — bounded per row, but
-    32 of them × 64 dims is ~2k interpreted multiply-adds per vector,
-    and a single-parquet-file scan ran all of it on ONE partition
-    (~25 s serial at sf1 for work that parallelizes embarrassingly).
-    ``ensure_parallelism=False`` skips the probe and the spread for
-    derived frames that already inherited parallelism (the
-    repetition_stats flag contract, ADVICE r13)."""
-    sc = vectors.sparkSession.sparkContext
-    if ensure_parallelism and vectors.rdd.getNumPartitions() < sc.defaultParallelism:
-        vectors = vectors.repartition(F.col(id_col))
-    cur = vectors
-    qcur = query.select(F.col("q").alias(vec_col))
-    for t in range(n_tables):
-        off = t * n_planes
-        cur = with_hyperplane_buckets(cur, n_planes, vec_col, f"__b{t}", off)
-        qcur = with_hyperplane_buckets(qcur, n_planes, vec_col, f"__qb{t}", off)
-    qsel = qcur.select(
-        F.col(vec_col).alias("q"), *[f"__qb{t}" for t in range(n_tables)]
-    )
-    cond = None
-    for t in range(n_tables):
-        c = F.expr(f"bit_count(__b{t} ^ __qb{t}) <= {int(multiprobe)}")
-        cond = c if cond is None else (cond | c)
-    scored = (
-        cur.join(F.broadcast(qsel), cond, "inner")
-        .select(
-            id_col,
-            "label",
-            F.round(
-                cosine(f"transform({vec_col}, x -> CAST(x AS DOUBLE))", "q"), 4
-            ).alias("cosine_sim"),
-        )
-    )
-    return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
-
-
-def build_lsh_index_multitable(
-    vectors: DataFrame,
-    path: str,
-    n_planes: int = 8,
-    n_tables: int = 4,
-    vec_col: str = "embedding",
-) -> None:
-    """Build-once for multi-table LSH: one bucket-partitioned copy of
-    the corpus per table (table t hashes with plane family t·n_planes),
-    written under <path>/table=<t>. Storage is L× the corpus — the
-    classic multi-table trade; each probe then reads L pruned bucket
-    directories instead of scanning anything."""
-    for t in range(n_tables):
-        (
-            with_hyperplane_buckets(vectors, n_planes, vec_col, "hp_bucket", t * n_planes)
-            .write.mode("overwrite")
-            .partitionBy("hp_bucket")
-            .parquet(f"{path.rstrip('/')}/table={t}")
-        )
-    spark = vectors.sparkSession
-    (
-        spark.createDataFrame([(n_planes, n_tables)], "n_planes int, n_tables int")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(path.rstrip("/") + ".meta")
-    )
-
-
-def lsh_topk_indexed_multitable(
-    spark,
-    path: str,
-    query: DataFrame,
-    k: int = 10,
-    multiprobe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Probe a build_lsh_index_multitable index: recompute the query's
-    bucket per table driver-side, read each table's probed bucket
-    directories (hp_bucket IN (…) → PartitionFilters, plan-asserted),
-    union, dedup by id (a candidate may collide in several tables),
-    exact top-k. Results pinned identical to the ad-hoc
-    lsh_topk_multitable at the same (n_planes, n_tables, multiprobe)."""
-    (meta,) = spark.read.parquet(path.rstrip("/") + ".meta").collect()
-    n_planes, n_tables = int(meta["n_planes"]), int(meta["n_tables"])
-    qcur = query.select(F.col("q").alias(vec_col))
-    for t in range(n_tables):
-        qcur = with_hyperplane_buckets(qcur, n_planes, vec_col, f"__qb{t}", t * n_planes)
-    (qrow,) = qcur.collect()  # one row driver-side — zero corpus jobs
-    parts = []
-    for t in range(n_tables):
-        probes = hamming_probe_buckets(int(qrow[f"__qb{t}"]), n_planes, multiprobe)
-        parts.append(
-            spark.read.parquet(f"{path.rstrip('/')}/table={t}")
-            .filter(F.col("hp_bucket").isin(probes))
-            .drop("hp_bucket")
-        )
-    cands = parts[0]
-    for p in parts[1:]:
-        cands = cands.unionByName(p)
-    return brute_force_topk(cands.dropDuplicates([id_col]), query, k, id_col, vec_col)
-
-
-def lsh_topk_indexed_batch(
-    spark,
-    path: str,
     queries: DataFrame,
     k: int = 10,
     multiprobe: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Batch probe of a PERSISTED LSH index (build_lsh_index): compute
-    every query's bucket driver-side with the stored plane count, read
-    the corpus once filtered to the UNION of all probed buckets
-    (``hp_bucket IN (…)`` → PartitionFilters), join candidates to the
-    broadcast (query_id, probe bucket, q) table on hp_bucket, rank per
-    query with one row_number window. The IVF twin is
-    clustering.ivf_topk_batch; per-query results pinned identical to
-    lsh_topk_indexed in tests."""
-    (meta,) = spark.read.parquet(path.rstrip("/") + ".meta").collect()
-    n_planes = int(meta["n_planes"])
-    qb = with_hyperplane_buckets(
-        queries.select("query_id", F.col("q").alias(vec_col)), n_planes, vec_col
-    ).collect()  # bounded query batch, driver-side by design
-    probe_rows = [
-        (int(r["query_id"]), int(b), [float(x) for x in r[vec_col]])
-        for r in qb
-        for b in hamming_probe_buckets(int(r["hp_bucket"]), n_planes, multiprobe)
-    ]
-    probes = spark.createDataFrame(
-        probe_rows, "query_id long, hp_bucket long, q array<double>"
-    )
-    all_buckets = sorted({b for _, b, _ in probe_rows})
-    corpus = spark.read.parquet(path).filter(F.col("hp_bucket").isin(all_buckets))
-    scored = corpus.join(F.broadcast(probes), "hp_bucket").select(
-        "query_id",
-        id_col,
-        "label",
-        F.round(
-            cosine(f"transform({vec_col}, x -> CAST(x AS DOUBLE))", "q"), 4
-        ).alias("cosine_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .drop("rank")
+    """Probe a PERSISTED LSH index (build_lsh_index, either layout) for
+    a (query_id, q) batch: every query's bucket per table is computed
+    with the stored plane count and collected to the driver (a bounded
+    batch — zero jobs over the corpus), expanded to its Hamming-≤
+    ``multiprobe`` flip neighborhood (hamming_probe_buckets), and
+    _probe_index reads each table once, pruned to the union of probed
+    buckets (``hp_bucket IN (…)`` → PartitionFilters, plan-asserted).
+    Results are identical to the ad-hoc lsh_topk at the same
+    (n_planes, n_tables, multiprobe)."""
+    n_planes, tables = _read_lsh_meta(spark, path)
+    qb = queries.select("query_id", F.col("q").alias("embedding"))
+    for t in range(len(tables)):
+        qb = with_hyperplane_buckets(qb, n_planes, "embedding", f"__qb{t}", t * n_planes)
+    qrows = qb.collect()
+    return _probe_index(
+        spark,
+        [
+            (
+                table,
+                "hp_bucket",
+                [
+                    (int(r["query_id"]), b, [float(x) for x in r["embedding"]])
+                    for r in qrows
+                    for b in hamming_probe_buckets(int(r[f"__qb{t}"]), n_planes, multiprobe)
+                ],
+            )
+            for t, table in enumerate(tables)
+        ],
+        k,
     )
 
 

@@ -140,10 +140,12 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.51 at 4 planes on the planted-neighbor harness); probing the
     bit-flip neighborhood lifts it to 0.875 (scripts/ann_recall.py,
     table in SCALE.md)."""
-    from parsedmarc_go_spark.operators.similarity import lsh_bucketed_topk, query_vector
+    from parsedmarc_go_spark.operators.similarity import lsh_topk
 
     emb = load(spark, sf_dir, "embeddings")
-    return lsh_bucketed_topk(emb, query_vector(emb, 0), k=10, n_planes=4, multiprobe=1)
+    return lsh_topk(emb, query_vector(emb, 0), k=10, n_planes=4, multiprobe=1).drop(
+        "query_id"
+    )
 
 
 @query("ann_lsh_multitable")
@@ -153,14 +155,14 @@ def ann_lsh_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-critical configuration from the SCALE.md operating table
     (0.985 recall@10 with multiprobe=1 on the planted harness).
     Rows-only: bucket membership depends on Spark-side xxhash64 plane
-    generation; n_tables=1 equality with the single-table operator and
-    indexed-path identity are pinned in tests/test_ann_recall.py."""
-    from parsedmarc_go_spark.operators.similarity import lsh_topk_multitable, query_vector
+    generation; batch-of-one identity and indexed-path identity are
+    pinned in tests/test_ann_recall.py."""
+    from parsedmarc_go_spark.operators.similarity import lsh_topk
 
     emb = load(spark, sf_dir, "embeddings")
-    return lsh_topk_multitable(
+    return lsh_topk(
         emb, query_vector(emb, 0), k=10, n_planes=8, n_tables=4, multiprobe=1
-    )
+    ).drop("query_id")
 
 
 @query("emb_quantize_int8")
@@ -190,22 +192,19 @@ def ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     in any warm-up pass; probes after it never re-hash the corpus),
     then Hamming-1 multi-probe top-k where the ``hp_bucket IN (…)``
     predicate is partition pruning (plan-asserted in test_dedup).
-    Rows-only: results are pinned identical to the ad-hoc
-    lsh_bucketed_topk at the same (n_planes, multiprobe) in
-    tests/test_ann_recall.py."""
+    Rows-only: results are pinned identical to the ad-hoc lsh_topk at
+    the same (n_planes, multiprobe) in tests/test_ann_recall.py."""
     import os
 
-    from parsedmarc_go_spark.operators.similarity import (
-        build_lsh_index,
-        lsh_topk_indexed,
-        query_vector,
-    )
+    from parsedmarc_go_spark.operators.similarity import build_lsh_index, lsh_topk_indexed
 
     emb = load(spark, sf_dir, "embeddings")
     path = _lsh_index_path(sf_dir)
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         build_lsh_index(emb, path, n_planes=6)
-    return lsh_topk_indexed(spark, path, query_vector(emb, 0), k=10, multiprobe=1)
+    return lsh_topk_indexed(spark, path, query_vector(emb, 0), k=10, multiprobe=1).drop(
+        "query_id"
+    )
 
 
 @query("semdedup_embeddings")

@@ -236,19 +236,25 @@ def ingest_files(files: DataFrame, as_of: str | None = None) -> IngestResult:
     (`storage.read_compacted_landing`), which is how the one-file-one-row
     trade-off of binaryFile is retired at 100 TB: consolidate once,
     re-ingest from chunky parquet forever after."""
-    extracted = extract_reports(files)
+    return parse_extracted(extract_reports(files), as_of)
+
+
+def parse_extracted(extracted: DataFrame, as_of: str | None = None) -> IngestResult:
+    """Everything after extraction, shared by batch ingest and the
+    streaming daemon's micro-batches: the three family parsers over the
+    extracted frame plus the rejects quarantine (hard extraction errors
+    ∪ per-family validity rejects)."""
     agg_reports, agg_records, agg_bad = parse_aggregate(extracted, as_of)
     forensic = parse_forensic(extracted, as_of)
     tls_reports, tls_failures, tls_bad = parse_smtp_tls(extracted, as_of)
     hard_errors = extracted.filter(F.col("kind") == "error").select(
         "path", F.lit("unknown").alias("kind"), "error"
     )
-    rejects = hard_errors.unionByName(agg_bad).unionByName(tls_bad)
     return IngestResult(
         aggregate_reports=agg_reports,
         aggregate_records=agg_records,
         forensic_reports=forensic,
         smtp_tls_reports=tls_reports,
         smtp_tls_failures=tls_failures,
-        rejects=rejects,
+        rejects=hard_errors.unionByName(agg_bad).unionByName(tls_bad),
     )

@@ -108,11 +108,13 @@ class ReportHTTPReceiver:
     small deployments; production fronts many of these behind an LB.
 
     `metrics_textfile` bridges engine-side metrics into the scrape
-    surface: the streaming daemon (or any batch job) renders its
-    DataFrame-derived counters with metrics.to_prometheus_textfile, and
-    GET /metrics serves that file's contents alongside the receiver's
-    own in-process HTTP counters — one endpoint, both layers, like the
-    reference's shared Prometheus registry (server.go:85-91)."""
+    surface: the streaming daemon publishes its counters with
+    metrics.write_metrics_textfile (a batch job its metric rows with
+    metrics.to_prometheus_textfile, through the same renderer and
+    atomic rename), and GET /metrics serves that file's contents
+    alongside the receiver's own in-process HTTP counters — one
+    endpoint, both layers, like the reference's shared Prometheus
+    registry (server.go:85-91)."""
 
     def __init__(
         self,

@@ -235,9 +235,7 @@ def _parquet_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
     """(n_data_files, total_bytes) under ``path``, via the Hadoop
     FileSystem API so maintenance jobs work on S3/HDFS/anything Spark
     can read — never the local-only pathlib."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = hadoop_fs(spark, path)
     it = fs.listFiles(hpath, True)
     n_files, total_bytes = 0, 0
     while it.hasNext():
@@ -309,14 +307,14 @@ def swap_directory(spark: SparkSession, tmp: str, path: str) -> None:
     file handles under ``path`` before the rename races the final
     delete. Shared by index compaction and the streaming fingerprint
     store (streaming/dedup.py)."""
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path
-    fs = hadoop_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
     old = path.rstrip("/") + ".old"
-    fs.delete(hadoop_path(old), True)  # leftover from a prior crash
-    if not fs.rename(hadoop_path(path), hadoop_path(old)):
+    fs, live = hadoop_fs(spark, path)
+    _, aside = hadoop_fs(spark, old)
+    _, staged = hadoop_fs(spark, tmp)
+    fs.delete(aside, True)  # leftover from a prior crash
+    if not fs.rename(live, aside):
         raise IOError(f"rename {path} -> {old} failed")
-    if not fs.rename(hadoop_path(tmp), hadoop_path(path)):
-        fs.rename(hadoop_path(old), hadoop_path(path))  # roll back
+    if not fs.rename(staged, live):
+        fs.rename(aside, live)  # roll back
         raise IOError(f"rename {tmp} -> {path} failed (rolled back)")
-    fs.delete(hadoop_path(old), True)
+    fs.delete(aside, True)

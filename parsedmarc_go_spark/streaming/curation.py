@@ -35,6 +35,7 @@ from parsedmarc_go_spark.caching import scope as caching_scope
 from parsedmarc_go_spark.caching import tracked_local_checkpoint
 from parsedmarc_go_spark.operators.classify import nb_score, train_nb_classifier
 from parsedmarc_go_spark.operators.lm import lm_score, train_bigram_lm
+from parsedmarc_go_spark.storage import hadoop_fs
 from parsedmarc_go_spark.streaming.daemon import _write_table
 
 CURATION_TABLES = ("docs_redacted", "repetition_stats", "decontamination")
@@ -65,10 +66,8 @@ def _pin_pipeline_mode(
     rename, where a concurrent first run would land its sidecar."""
     import os
 
-    from parsedmarc_go_spark.streaming.dedup import _hadoop_fs
-
     d = os.path.join(store_dir, "pipeline_mode")
-    fs, hpath = _hadoop_fs(spark, d)
+    fs, hpath = hadoop_fs(spark, d)
     if not fs.exists(hpath):
         # no sidecar: a store from before the sidecar existed must NOT
         # be blind-pinned to the CURRENT flag — that would stamp the
@@ -78,7 +77,7 @@ def _pin_pipeline_mode(
         # data: greedy writes `minhash`, verified writes
         # `minhash_docs`+`shingles`.
         def _sub_exists(sub: str) -> bool:
-            _, p = _hadoop_fs(spark, os.path.join(store_dir, sub))
+            _, p = hadoop_fs(spark, os.path.join(store_dir, sub))
             return bool(fs.exists(p))
 
         had_greedy = _sub_exists("minhash")
@@ -304,10 +303,8 @@ def _read_budget_state(
     ``n_kept`` kept docs), or None before the first batch lands.
     ``exclude_batch_id`` is the replay-idempotence filter — a re-run
     of batch N must see the counters exactly as the first run did."""
-    from parsedmarc_go_spark.streaming.dedup import _hadoop_fs
-
     path = _budget_path(store_dir)
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return None
     df = spark.read.parquet(path)

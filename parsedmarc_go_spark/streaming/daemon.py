@@ -20,8 +20,9 @@ appending duplicates. (Plain `append` here would silently degrade to
 at-least-once across the five non-atomic writes.) Readers drop the
 bookkeeping column via `read_stream_table`.
 
-Batch/stream parity is structural: foreachBatch calls the identical
-parse functions the batch path uses, so tests assert table equality.
+Batch/stream parity is structural: foreachBatch runs the identical
+post-extraction DAG the batch path uses (ingest.parse_extracted), so
+tests assert table equality.
 """
 
 from __future__ import annotations
@@ -32,12 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from parsedmarc_go_spark.sources.ingest import (
-    extract_reports,
-    parse_aggregate,
-    parse_forensic,
-    parse_smtp_tls,
-)
+from parsedmarc_go_spark.sources.ingest import extract_reports, parse_extracted
 
 BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
 
@@ -93,6 +89,8 @@ def make_batch_processor(
     batch_contribs: dict[int, dict[tuple[str, str], float]] = {}
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
+        from dataclasses import replace
+
         from parsedmarc_go_spark.functions.enrich import enrich_records
 
         spark = batch.sparkSession
@@ -102,55 +100,24 @@ def make_batch_processor(
             # `as_of` pins the ingest clock: with it set, a crash-and-
             # replay of batch N rewrites byte-identical files (created_at
             # included) instead of merely row-equivalent ones
-            agg_reports, agg_records, agg_bad = parse_aggregate(extracted, as_of)
-            forensic = parse_forensic(extracted, as_of)
-            tls_reports, tls_failures, tls_bad = parse_smtp_tls(extracted, as_of)
+            res = parse_extracted(extracted, as_of)
             if enrichment is not None:
-                agg_records = enrich_records(agg_records, enrichment)
-                forensic = enrich_records(forensic, enrichment)
-            hard = extracted.filter(F.col("kind") == "error").select(
-                "path", F.lit("unknown").alias("kind"), "error"
-            )
-            outputs = {
-                "aggregate_reports": agg_reports,
-                "aggregate_records": agg_records,
-                "forensic_reports": forensic,
-                "smtp_tls_reports": tls_reports,
-                "smtp_tls_failures": tls_failures,
-                "rejects": hard.unionByName(agg_bad).unionByName(tls_bad),
-            }
+                res = replace(
+                    res,
+                    aggregate_records=enrich_records(res.aggregate_records, enrichment),
+                    forensic_reports=enrich_records(res.forensic_reports, enrichment),
+                )
             # idempotent commit: a replay of batch N replaces batch N's
             # files and touches nothing else (see _write_table)
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            for name, df in outputs.items():
-                _write_table(df, out_dir, name, batch_id)
+            for name in STREAM_TABLES:
+                _write_table(getattr(res, name), out_dir, name, batch_id)
             if metrics_path:
-                from parsedmarc_go_spark.metrics import (
-                    escape_label_value,
-                    write_metrics_textfile,
-                )
+                from parsedmarc_go_spark.metrics import ingest_counters, write_metrics_textfile
 
                 # counts re-derive from the cached `extracted` frame, so
                 # these are cheap follow-up jobs, not a second file scan
-                contrib: dict[tuple[str, str], float] = {}
-                for family, df in (
-                    ("aggregate", agg_reports),
-                    ("forensic", forensic),
-                    ("smtp_tls", tls_reports),
-                ):
-                    key = (
-                        "parsedmarc_parser_reports_total",
-                        f'type="{family}",source="stream"',
-                    )
-                    contrib[key] = contrib.get(key, 0.0) + df.count()
-                for r in outputs["rejects"].groupBy("kind", "error").count().collect():
-                    key = (
-                        "parsedmarc_parser_failures_total",
-                        f'type="{r["kind"]}",source="stream",'
-                        f'reason="{escape_label_value(r["error"] or "")}"',
-                    )
-                    contrib[key] = contrib.get(key, 0.0) + r["count"]
-                batch_contribs[batch_id] = contrib  # replay-safe overwrite
+                batch_contribs[batch_id] = ingest_counters(res, "stream")  # replay-safe overwrite
                 totals: dict[tuple[str, str], float] = {}
                 for c in batch_contribs.values():
                     for key, v in c.items():

@@ -99,7 +99,7 @@ from parsedmarc_go_spark.operators.dedup import (
     paragraph_dedup,
     paragraph_keys,
 )
-from parsedmarc_go_spark.storage import _parquet_file_stats, swap_directory
+from parsedmarc_go_spark.storage import _parquet_file_stats, hadoop_fs, swap_directory
 from parsedmarc_go_spark.streaming.daemon import _write_table
 
 STORE_TABLE = "fingerprints"
@@ -134,12 +134,6 @@ DEFAULT_BLOOM_FPP = 0.01
 # blooms bigger than this many BITS (64 MB packed) probe via a shuffle
 # join on word_idx instead of a broadcast of the word table
 BLOOM_BROADCAST_MAX_BITS = 512 * 1024 * 1024
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    from parsedmarc_go_spark.storage import hadoop_fs
-
-    return hadoop_fs(spark, path)
 
 
 def _bucket_expr(n_buckets: int, col: str = "ph"):
@@ -187,7 +181,7 @@ def _read_meta_dict(spark: SparkSession, store_dir: str) -> dict | None:
     if cached is not None:
         return cached
     path = _meta_path(store_dir)
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return None
     try:
@@ -252,7 +246,7 @@ def _write_store_meta(
         .write.mode("overwrite")
         .json(tmp)
     )
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     if fs.exists(hpath):
         swap_directory(spark, tmp, path)
     else:
@@ -318,7 +312,7 @@ def read_bloom_words(spark: SparkSession, store_dir: str) -> DataFrame | None:
     survives either way because the aside copy is the complete previous
     bloom."""
     path = _bloom_path(store_dir)
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         old = spark._jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + ".old")
         if fs.exists(old):
@@ -399,7 +393,7 @@ def _store_exists(spark: SparkSession, store_dir: str) -> bool:
     distinct from the meta sidecar existing: a table WITHOUT meta is a
     legacy (pre-bucketed) store, which creation-time pinning must not
     mistake for a brand-new one (ADVICE r10)."""
-    fs, hpath = _hadoop_fs(spark, os.path.join(store_dir, STORE_TABLE))
+    fs, hpath = hadoop_fs(spark, os.path.join(store_dir, STORE_TABLE))
     return bool(fs.exists(hpath))
 
 
@@ -417,7 +411,7 @@ def read_fingerprints(
     silently treating all history as unseen would wave duplicates
     through with no error surfaced (ADVICE r9)."""
     path = os.path.join(store_dir, STORE_TABLE)
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return spark.createDataFrame([], _EMPTY_STORE_SCHEMA)
     df = spark.read.parquet(path)
@@ -538,7 +532,7 @@ def _load_or_train_centroids(
     from parsedmarc_go_spark.operators.clustering import kmeans_fit
 
     path = os.path.join(store_dir, VEC_STORE_TABLE + ".centroids")
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     if fs.exists(hpath):
         rows = sorted(
             spark.read.parquet(path).collect(), key=lambda r: r["cell"]
@@ -606,7 +600,7 @@ def _process_semdedup_batch(
     )
     assigned = assign_cells(batch, cents, vec_col, "cell").persist()
     vec_path = os.path.join(store_dir, VEC_STORE_TABLE)
-    fs, hpath = _hadoop_fs(spark, vec_path)
+    fs, hpath = hadoop_fs(spark, vec_path)
     if fs.exists(hpath):
         # bounded collect: at most n_clusters cell ids — prunes the
         # store scan's partition directories to the batch's cells
@@ -1058,7 +1052,7 @@ def _write_run_partition(
         .partitionBy(*part_cols)
         .parquet(tmp)
     )
-    fs, dst = _hadoop_fs(spark, _batch_partition_dir(store_dir, run_id))
+    fs, dst = hadoop_fs(spark, _batch_partition_dir(store_dir, run_id))
     jvm = spark._jvm
     src = jvm.org.apache.hadoop.fs.Path(
         os.path.join(tmp, f"__batch_id={run_id}")
@@ -1075,7 +1069,7 @@ def _write_run_partition(
 
 
 def _delete_partition(spark: SparkSession, store_dir: str, batch_id: int) -> None:
-    fs, hpath = _hadoop_fs(spark, _batch_partition_dir(store_dir, batch_id))
+    fs, hpath = hadoop_fs(spark, _batch_partition_dir(store_dir, batch_id))
     if fs.exists(hpath):
         fs.delete(hpath, True)
 
@@ -1084,7 +1078,7 @@ def _list_partition_ids(spark: SparkSession, store_dir: str) -> list[int]:
     """Batch-id partition directories present on disk (committed or
     not), via the filesystem — never a data scan."""
     path = os.path.join(store_dir, STORE_TABLE)
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     ids = []
     for status in fs.listStatus(hpath):
         name = status.getPath().getName()

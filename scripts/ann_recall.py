@@ -11,10 +11,13 @@ grid for:
 - IVF (trained spherical k-means cells, persisted index, nprobe grid) —
   `clustering.build_ivf_index` + `ivf_topk_indexed`, the real
   partition-pruned probe path;
-- hyperplane LSH (n_planes × multiprobe grid) — `lsh_topk_batch`, whose
-  per-query results are pinned identical to `lsh_bucketed_topk` /
-  `lsh_topk_indexed` in tests, so one batch job measures the whole
-  query set per config.
+- hyperplane LSH (n_planes × multiprobe grid, then the multi-table
+  OR-amplification grid) — `lsh_topk`, whose per-query results are
+  pinned identical to a batch of one and to `lsh_topk_indexed` in
+  tests.
+
+Every probe takes the whole query set as one (query_id, q) batch, so
+one job measures a config.
 
 Alongside recall it reports the SCAN fraction (rows the probe actually
 touches / corpus rows) — recall without its scan budget is
@@ -94,7 +97,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from parsedmarc_go_spark.operators.clustering import build_ivf_index, ivf_topk_indexed
-    from parsedmarc_go_spark.operators.similarity import lsh_topk_batch
+    from parsedmarc_go_spark.operators.similarity import lsh_topk, with_hyperplane_buckets
     from parsedmarc_go_spark.session import get_spark
 
     spark = get_spark(app_name="ann-recall", master="local[8]", shuffle_partitions=8)
@@ -108,6 +111,13 @@ def main() -> None:
     corpus.count()
     queries = spark.createDataFrame(qrows, "query_id long, q array<double>")
 
+    def recall(topk) -> float:
+        got: dict[int, set] = {}
+        for r in topk.collect():
+            got.setdefault(r.query_id, set()).add(r.vec_id)
+        hits = sum(len(got.get(qi, set()) & truth[qi]) for qi, _ in qrows)
+        return round(hits / (K * len(qrows)), 3)
+
     results: list[dict] = []
 
     # ---- IVF: persisted index, nprobe grid --------------------------------
@@ -118,17 +128,9 @@ def main() -> None:
         for r in spark.read.parquet(idx).groupBy("cell").agg(F.count("*").alias("n")).collect()
     }
     for nprobe in (1, 2, 4, 8):
-        hits, scanned = 0, 0
-        for qi, qv in qrows:
-            q = spark.createDataFrame([(qv,)], "q array<double>")
-            got = {
-                r.vec_id
-                for r in ivf_topk_indexed(
-                    spark, idx, q, k=K, nprobe=nprobe, cents=cents
-                ).collect()
-            }
-            hits += len(got & truth[qi])
-            # scan cost = rows in the probed cells (what the pruned read touches)
+        # scan cost = rows in the probed cells (what the pruned read touches)
+        scanned = 0
+        for _, qv in qrows:
             uq = np.array(qv) / np.linalg.norm(qv)
             ranked = sorted(
                 range(len(cents)),
@@ -139,70 +141,19 @@ def main() -> None:
             {
                 "operator": "ivf_topk_indexed",
                 "config": f"n_cells=16 nprobe={nprobe}",
-                "recall_at_10": round(hits / (K * len(qrows)), 3),
+                "recall_at_10": recall(
+                    ivf_topk_indexed(spark, idx, queries, k=K, nprobe=nprobe, cents=cents)
+                ),
                 "scan_frac": round(scanned / (n_total * len(qrows)), 3),
             }
         )
 
-    # ---- LSH: n_planes × multiprobe grid ----------------------------------
-    for n_planes in (4, 6, 8):
-        for mp in (0, 1, 2):
-            topk = lsh_topk_batch(
-                corpus, queries, k=K, n_planes=n_planes, multiprobe=mp
-            ).collect()
-            got: dict[int, set] = {}
-            for r in topk:
-                got.setdefault(r.query_id, set()).add(r.vec_id)
-            hits = sum(len(got.get(qi, set()) & truth[qi]) for qi, _ in qrows)
-            # candidate rows the probe touches, per query, averaged
-            from parsedmarc_go_spark.operators.similarity import with_hyperplane_buckets
-
-            bucketed = with_hyperplane_buckets(corpus, n_planes, "embedding")
-            qb = with_hyperplane_buckets(
-                queries.select("query_id", F.col("q").alias("embedding")),
-                n_planes,
-                "embedding",
-            ).select("query_id", F.col("hp_bucket").alias("q_bucket"))
-            n_cand = (
-                bucketed.join(
-                    F.broadcast(qb),
-                    F.expr(f"bit_count(hp_bucket ^ q_bucket) <= {mp}"),
-                    "inner",
-                ).count()
-            )
-            results.append(
-                {
-                    "operator": "lsh_topk",
-                    "config": f"n_planes={n_planes} multiprobe={mp}",
-                    "recall_at_10": round(hits / (K * len(qrows)), 3),
-                    "scan_frac": round(n_cand / (n_total * len(qrows)), 3),
-                }
-            )
-
-    # ---- multi-table LSH: OR-amplification grid ---------------------------
-    from parsedmarc_go_spark.operators.similarity import (
-        lsh_topk_multitable,
-        with_hyperplane_buckets,
-    )
-
-    for n_planes, n_tables, mp in (
-        (8, 2, 0),
-        (8, 4, 0),
-        (8, 4, 1),
-        (6, 4, 0),
-    ):
-        hits = 0
-        for qi, qv in qrows:
-            q = spark.createDataFrame([(qv,)], "q array<double>")
-            got = {
-                r.vec_id
-                for r in lsh_topk_multitable(
-                    corpus, q, k=K, n_planes=n_planes, n_tables=n_tables, multiprobe=mp
-                ).collect()
-            }
-            hits += len(got & truth[qi])
-        # candidate volume in one batch job: all-table buckets on both sides,
-        # OR-of-bit_count join, count
+    # ---- LSH: n_planes × multiprobe grid, then OR-amplified tables --------
+    grid = [(n_planes, 1, mp) for n_planes in (4, 6, 8) for mp in (0, 1, 2)]
+    grid += [(8, 2, 0), (8, 4, 0), (8, 4, 1), (6, 4, 0)]
+    for n_planes, n_tables, mp in grid:
+        # candidate rows the probe touches, per query, averaged: all-table
+        # buckets on both sides, the probe's OR-of-bit_count join, count
         bucketed = corpus
         qb = queries.select("query_id", F.col("q").alias("embedding"))
         for t in range(n_tables):
@@ -213,14 +164,17 @@ def main() -> None:
         for t in range(n_tables):
             c = F.expr(f"bit_count(__b{t} ^ __qb{t}) <= {mp}")
             cond = c if cond is None else (cond | c)
-        n_cand = bucketed.join(
-            F.broadcast(qb.drop("embedding")), cond, "inner"
-        ).count()
+        n_cand = bucketed.join(F.broadcast(qb.drop("embedding")), cond, "inner").count()
+        tables = f" n_tables={n_tables}" if n_tables > 1 else ""
         results.append(
             {
-                "operator": "lsh_topk_multitable",
-                "config": f"n_planes={n_planes} n_tables={n_tables} multiprobe={mp}",
-                "recall_at_10": round(hits / (K * len(qrows)), 3),
+                "operator": "lsh_topk",
+                "config": f"n_planes={n_planes}{tables} multiprobe={mp}",
+                "recall_at_10": recall(
+                    lsh_topk(
+                        corpus, queries, k=K, n_planes=n_planes, n_tables=n_tables, multiprobe=mp
+                    )
+                ),
                 "scan_frac": round(n_cand / (n_total * len(qrows)), 3),
             }
         )

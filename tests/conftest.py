@@ -8,6 +8,21 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
 
+def topk_by_query(df) -> dict[int, list[tuple[int, float]]]:
+    """An ANN probe's top-k frame as {query_id: [(vec_id, cosine_sim)]}
+    in rank order (cosine desc, id asc) — the probes rank per query but
+    return the surviving rows unordered."""
+    out: dict[int, list[tuple[int, float]]] = {}
+    for r in sorted(df.collect(), key=lambda r: (-r.cosine_sim, r.vec_id)):
+        out.setdefault(r.query_id, []).append((r.vec_id, r.cosine_sim))
+    return out
+
+
+def ranked(df) -> list[tuple[int, float]]:
+    """(vec_id, cosine_sim) rows of a top-k frame in rank order."""
+    return sorted(((r.vec_id, r.cosine_sim) for r in df.collect()), key=lambda p: (-p[1], p[0]))
+
+
 @pytest.fixture(scope="session")
 def spark():
     from parsedmarc_go_spark.session import get_spark

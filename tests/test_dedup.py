@@ -17,7 +17,7 @@ from parsedmarc_go_spark.operators.similarity import (
     query_vector,
 )
 from parsedmarc_go_spark.tables import load
-from tests.conftest import SF_CORRECT, SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE, ranked
 
 
 def _pairs(df):
@@ -103,13 +103,13 @@ def test_ivf_recall_vs_bruteforce(spark):
 
 def test_lsh_bucketed_ann_finds_self_and_overlaps(spark):
     from parsedmarc_go_spark.operators.similarity import (
-        lsh_bucketed_topk,
+        lsh_topk,
         with_hyperplane_buckets,
     )
 
     emb = load(spark, SF_CORRECT, "embeddings")
     q = query_vector(emb, 0)
-    got = [r.vec_id for r in lsh_bucketed_topk(emb, q, k=10, n_planes=4).collect()]
+    got = [vid for vid, _ in ranked(lsh_topk(emb, q, k=10, n_planes=4))]
     assert got, "query bucket empty"
     assert got[0] == 0, "query vector must rank first in its own bucket"
     # buckets are deterministic and partition the corpus
@@ -323,7 +323,7 @@ def test_lsh_index_build_once_prunes_partitions(spark, tmp_path):
     re-hash path at the same plane count."""
     from parsedmarc_go_spark.operators.similarity import (
         build_lsh_index,
-        lsh_bucketed_topk,
+        lsh_topk,
         lsh_topk_indexed,
         query_vector,
     )
@@ -340,11 +340,8 @@ def test_lsh_index_build_once_prunes_partitions(spark, tmp_path):
     scan = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert scan and "hp_bucket" in scan[0], plan
 
-    adhoc = [
-        (r.vec_id, r.cosine_sim)
-        for r in lsh_bucketed_topk(emb, q, k=10, n_planes=6).collect()
-    ]
-    indexed = [(r.vec_id, r.cosine_sim) for r in topk.collect()]
+    adhoc = ranked(lsh_topk(emb, q, k=10, n_planes=6))
+    indexed = ranked(topk)
     assert indexed == adhoc and indexed[0][0] == 0
 
 

@@ -12,15 +12,13 @@ import os
 
 from pyspark.sql import functions as F
 
+from tests.conftest import ranked
+
 # index append/compact e2e: excluded from the default (driver-visible) lane — run with -m ""
 pytestmark = pytest.mark.slow
 
 SF_DIR = "/root/testdata/sf0.001"
 N_APPENDS = 12
-
-
-def _probe_rows(df):
-    return [(r[0], round(float(r[1]), 12)) for r in df.collect()]
 
 
 def test_ivf_compaction_identity_and_file_collapse(spark, tmp_path):
@@ -45,9 +43,7 @@ def test_ivf_compaction_identity_and_file_collapse(spark, tmp_path):
         )
 
     q = query_vector(emb, 0)
-    before = _probe_rows(
-        ivf_topk_indexed(spark, path, q, k=10, nprobe=4).select("vec_id", "cosine_sim")
-    )
+    before = ranked(ivf_topk_indexed(spark, path, q, k=10, nprobe=4))
     cents_before = sorted(os.listdir(path + ".centroids"))
 
     files_before, files_after = compact_ivf_index(spark, path)
@@ -55,9 +51,7 @@ def test_ivf_compaction_identity_and_file_collapse(spark, tmp_path):
     # the spray collapses to ONE file per cell directory
     assert files_before > files_after == n_cells
 
-    after = _probe_rows(
-        ivf_topk_indexed(spark, path, q, k=10, nprobe=4).select("vec_id", "cosine_sim")
-    )
+    after = ranked(ivf_topk_indexed(spark, path, q, k=10, nprobe=4))
     assert before == after
     # sidecar untouched (same files, byte-for-byte listing)
     assert sorted(os.listdir(path + ".centroids")) == cents_before
@@ -81,16 +75,12 @@ def test_ivf_sq8_compaction_preserves_quantized_layout(spark, tmp_path):
     append_to_ivf_index(emb.filter(F.col("vec_id") >= 300), path)
 
     q = query_vector(emb, 7)
-    before = _probe_rows(
-        ivf_topk_indexed(spark, path, q, k=10, nprobe=3).select("vec_id", "cosine_sim")
-    )
+    before = ranked(ivf_topk_indexed(spark, path, q, k=10, nprobe=3))
     files_before, files_after = compact_ivf_index(spark, path)
     assert files_after < files_before
     # still the int8 layout on disk — compaction must not dequantize
     assert "embedding_q" in spark.read.parquet(path).columns
-    after = _probe_rows(
-        ivf_topk_indexed(spark, path, q, k=10, nprobe=3).select("vec_id", "cosine_sim")
-    )
+    after = ranked(ivf_topk_indexed(spark, path, q, k=10, nprobe=3))
     assert before == after
 
 
@@ -98,10 +88,8 @@ def test_lsh_compaction_identity_single_and_multitable(spark, tmp_path):
     from parsedmarc_go_spark.operators.similarity import (
         append_to_lsh_index,
         build_lsh_index,
-        build_lsh_index_multitable,
         compact_lsh_index,
         lsh_topk_indexed,
-        lsh_topk_indexed_multitable,
         query_vector,
     )
     from parsedmarc_go_spark.tables import load
@@ -116,34 +104,18 @@ def test_lsh_compaction_identity_single_and_multitable(spark, tmp_path):
         append_to_lsh_index(
             emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)), path
         )
-    before = _probe_rows(
-        lsh_topk_indexed(spark, path, q, k=10, multiprobe=1).select(
-            "vec_id", "cosine_sim"
-        )
-    )
+    before = ranked(lsh_topk_indexed(spark, path, q, k=10, multiprobe=1))
     files_before, files_after = compact_lsh_index(spark, path)
     n_buckets = len([d for d in os.listdir(path) if d.startswith("hp_bucket=")])
     assert files_before > files_after == n_buckets
-    after = _probe_rows(
-        lsh_topk_indexed(spark, path, q, k=10, multiprobe=1).select(
-            "vec_id", "cosine_sim"
-        )
-    )
+    after = ranked(lsh_topk_indexed(spark, path, q, k=10, multiprobe=1))
     assert before == after
 
     # multi-table layout: each table=<t> copy compacts independently
     mpath = str(tmp_path / "lsh_mt")
-    build_lsh_index_multitable(emb, mpath, n_planes=4, n_tables=2)
-    mt_before = _probe_rows(
-        lsh_topk_indexed_multitable(spark, mpath, q, k=10).select(
-            "vec_id", "cosine_sim"
-        )
-    )
+    build_lsh_index(emb, mpath, n_planes=4, n_tables=2)
+    mt_before = ranked(lsh_topk_indexed(spark, mpath, q, k=10))
     fb, fa = compact_lsh_index(spark, mpath)
     assert fa <= fb
-    mt_after = _probe_rows(
-        lsh_topk_indexed_multitable(spark, mpath, q, k=10).select(
-            "vec_id", "cosine_sim"
-        )
-    )
+    mt_after = ranked(lsh_topk_indexed(spark, mpath, q, k=10))
     assert mt_before == mt_after

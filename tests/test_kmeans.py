@@ -17,6 +17,8 @@ from parsedmarc_go_spark.operators.clustering import (
     load_ivf_centroids,
 )
 
+from tests.conftest import ranked, topk_by_query
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -166,7 +168,7 @@ def test_ivf_index_build_once_prunes_partitions(spark, tmp_path):
 
     # 2) quality: same agreement bar as the retrain-per-query path
     exact = [r.vec_id for r in brute_force_topk(emb, q, k=10).collect()]
-    got = [r.vec_id for r in topk.collect()]
+    got = [vid for vid, _ in ranked(topk)]
     assert len(set(got) & set(exact)) >= 8
     assert got[0] == 0
 
@@ -178,16 +180,11 @@ def test_ivf_index_build_once_prunes_partitions(spark, tmp_path):
 
 
 def test_ivf_batch_matches_per_query_and_prunes(spark, tmp_path):
-    """ivf_topk_batch: one job for a whole query batch, per-query
-    results identical to ivf_topk_indexed, probe read still pruned to
-    the union of probed cells at PLAN level."""
+    """ivf_topk_indexed over a query batch: one job, every query gets
+    row-for-row its batch-of-one result, probe read still pruned to the
+    union of probed cells at PLAN level."""
     from pyspark.sql import functions as F
 
-    from parsedmarc_go_spark.operators.clustering import (
-        build_ivf_index,
-        ivf_topk_batch,
-        ivf_topk_indexed,
-    )
     from parsedmarc_go_spark.operators.similarity import query_vector
     from parsedmarc_go_spark.tables import load
 
@@ -200,28 +197,23 @@ def test_ivf_batch_matches_per_query_and_prunes(spark, tmp_path):
         F.col("vec_id").alias("query_id"),
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("q"),
     )
-    batch = ivf_topk_batch(spark, path, queries, k=10, nprobe=3)
+    batch = ivf_topk_indexed(spark, path, queries, k=10, nprobe=3)
 
     plan = batch._jdf.queryExecution().executedPlan().toString()
     pruned = [
         ln
         for ln in plan.splitlines()
-        if "PartitionFilters: [cell" in ln and " IN (" in ln
+        if "PartitionFilters: [cell" in ln and (" IN (" in ln or " INSET " in ln)
     ]
-    assert pruned, plan
+    assert len(pruned) == 1, plan
 
-    rows = batch.collect()
-    by_q: dict[int, list] = {}
-    for r in sorted(rows, key=lambda r: (-r.cosine_sim, r.vec_id)):
-        by_q.setdefault(r.query_id, []).append((r.vec_id, r.cosine_sim))
+    by_q = topk_by_query(batch)
+    assert sorted(by_q) == qids
     for qid in qids:
-        solo = [
-            (r.vec_id, r.cosine_sim)
-            for r in ivf_topk_indexed(
-                spark, path, query_vector(emb, qid), k=10, nprobe=3
-            ).collect()
-        ]
-        assert by_q[qid] == solo, f"batch != per-query for query {qid}"
+        solo = topk_by_query(
+            ivf_topk_indexed(spark, path, query_vector(emb, qid), k=10, nprobe=3)
+        )
+        assert by_q[qid] == solo[qid], f"batch != per-query for query {qid}"
 
 
 def test_build_ivf_index_auto_sizes_cells(spark, tmp_path):
@@ -270,14 +262,8 @@ def test_ivf_index_append_equals_frozen_quantizer_rebuild(spark, tmp_path):
     assign_cells(emb, cents, "embedding", "cell").write.partitionBy("cell").parquet(ref)
 
     q = query_vector(emb, 0)
-    got_inc = [
-        (r.vec_id, r.cosine_sim)
-        for r in ivf_topk_indexed(spark, inc, q, k=10, nprobe=3).collect()
-    ]
-    got_ref = [
-        (r.vec_id, r.cosine_sim)
-        for r in ivf_topk_indexed(spark, ref, q, k=10, nprobe=3, cents=cents).collect()
-    ]
+    got_inc = ranked(ivf_topk_indexed(spark, inc, q, k=10, nprobe=3))
+    got_ref = ranked(ivf_topk_indexed(spark, ref, q, k=10, nprobe=3, cents=cents))
     assert got_inc == got_ref and got_inc[0][0] == 0
 
 
@@ -314,8 +300,8 @@ def test_ivf_sq8_index_smaller_and_agrees(spark, tmp_path):
     )
 
     q = query_vector(emb, 0)
-    full = [r.vec_id for r in ivf_topk_indexed(spark, fp, q, k=10, nprobe=3).collect()]
-    sq8 = [r.vec_id for r in ivf_topk_indexed(spark, sq, q, k=10, nprobe=3).collect()]
+    full = [vid for vid, _ in ranked(ivf_topk_indexed(spark, fp, q, k=10, nprobe=3))]
+    sq8 = [vid for vid, _ in ranked(ivf_topk_indexed(spark, sq, q, k=10, nprobe=3))]
     assert len(set(full) & set(sq8)) >= 9 and sq8[0] == 0
 
 
@@ -325,13 +311,13 @@ def test_ivf_sq8_probe_scores_int8_direct(spark, tmp_path):
     never read q_scale at all — proof at PLAN level that no
     array<double> dequantization buffer exists on the probe path."""
     from parsedmarc_go_spark.operators.clustering import (
-        _read_ivf_corpus,
         build_ivf_index,
         ivf_topk_indexed,
         load_ivf_centroids,
     )
     from parsedmarc_go_spark.operators.similarity import (
         brute_force_topk,
+        dequantize_embeddings,
         query_vector,
     )
     from parsedmarc_go_spark.tables import load
@@ -343,8 +329,7 @@ def test_ivf_sq8_probe_scores_int8_direct(spark, tmp_path):
 
     for vid in (0, 7, 42):
         q = query_vector(emb, vid)
-        probe = ivf_topk_indexed(spark, path, q, k=10, nprobe=3, cents=cents)
-        got = [(r.vec_id, r.cosine_sim) for r in probe.collect()]
+        got = ranked(ivf_topk_indexed(spark, path, q, k=10, nprobe=3, cents=cents))
 
         # reference: the old dequantize-then-score path over ALL cells'
         # worth of the same index, restricted to the probed set by
@@ -353,14 +338,16 @@ def test_ivf_sq8_probe_scores_int8_direct(spark, tmp_path):
         qv = list(qrow.q)
         n = sum(x * x for x in qv) ** 0.5
         uv = [x / n for x in qv]
-        ranked = sorted(
+        order = sorted(
             range(len(cents)),
             key=lambda i: (-sum(a * b for a, b in zip(cents[i], uv)), i),
         )
-        probed = [int(i) for i in ranked[:3]]
-        deq = _read_ivf_corpus(spark, path, "embedding").filter(
-            F.col("cell").isin(probed)
-        ).drop("cell")
+        probed = [int(i) for i in order[:3]]
+        deq = (
+            dequantize_embeddings(spark.read.parquet(path))
+            .filter(F.col("cell").isin(probed))
+            .drop("cell", "embedding_q", "q_scale")
+        )
         ref = [
             (r.vec_id, r.cosine_sim)
             for r in brute_force_topk(deq, q, k=10).collect()
