@@ -1674,7 +1674,7 @@ def curation_pipeline_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING twin under the driver's value oracle: two real
     readStream(availableNow) micro-batch triggers over an ascending-
     doc_id split of the planted gate corpus, fates accumulated through
-    the persisted exact/minhash/budget stores
+    the persisted exact/near-dup/budget stores
     (streaming/curation.py::stream_curation_pipeline)."""
     import os
 
@@ -1693,16 +1693,11 @@ def curation_pipeline_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(root, "out")
     ckpt = os.path.join(root, "ckpt")
     store = os.path.join(root, "store")
-    # verified near-dup mode: cross-trigger collisions are exact-
-    # Jaccard-verified against the stored shingle sets, making the
-    # stream's near set BIT-IDENTICAL to batch's (the greedy default's
-    # unverified history collisions drop sub-threshold pairs — the r13
-    # pinned divergence — which a value oracle cannot absorb)
-    kw = dict(
-        budget=10**12,
-        quality_thresholds={"max_mean_word_len": 4.5},
-        verify_near_dups=True,
-    )
+    # the stream's near-dup stage verifies cross-trigger collisions
+    # with exact Jaccard against the stored shingle sets, so under
+    # this ascending-doc_id split its near set is BIT-IDENTICAL to
+    # batch's — the value oracle holds the stream to the batch fates
+    kw = dict(budget=10**12, quality_thresholds={"max_mean_word_len": 4.5})
 
     # trigger 1: the low-id shard lands, stream drains it
     corpus.filter(F.col("doc_id") < cut).write.parquet(

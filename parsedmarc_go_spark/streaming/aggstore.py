@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from parsedmarc_go_spark.storage import _parquet_file_stats, swap_directory
+from parsedmarc_go_spark.streaming.daemon import _overwrite_partitions, _start_stream
 
 COUNT_TABLE = "counts"
 DEFAULT_COUNT_BUCKETS = 64
@@ -66,33 +67,27 @@ def make_count_processor(
     batch on ``key_cols`` (row count, or ``sum(weight_col)``), write
     the partial to the batch's own ``__batch_id`` partition. Replay
     overwrites the identical partial — idempotent with no
-    read-modify-write."""
+    read-modify-write. An EMPTY batch is skipped, as
+    streaming/dedup.py::_write_store skips an empty append: its empty
+    partial's write would leave a file-less ``counts/`` directory that
+    every later read fails to infer a schema from. (A non-empty batch
+    always has a non-empty partial, so testing the batch costs a
+    limit-1 scan instead of a second aggregate.)"""
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
+        if batch.isEmpty():
+            return
+        agg = (F.sum(weight_col) if weight_col else F.count("*")).alias("cnt")
+        partial = batch.groupBy(*key_cols).agg(agg)
+        bucket = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
+        _overwrite_partitions(
+            partial.withColumn("__batch_id", F.lit(batch_id)).withColumn(
+                "__bucket", bucket
+            ),
+            _count_path(store_dir),
+            "__batch_id",
+            "__bucket",
         )
-        try:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
-            )
-            agg = (
-                F.sum(weight_col) if weight_col else F.count("*")
-            ).alias("cnt")
-            partial = batch.groupBy(*key_cols).agg(agg)
-            bucket = F.pmod(
-                F.xxhash64(*key_cols), F.lit(n_buckets)
-            ).cast("int")
-            (
-                partial.withColumn("__batch_id", F.lit(batch_id))
-                .withColumn("__bucket", bucket)
-                .write.mode("overwrite")
-                .partitionBy("__batch_id", "__bucket")
-                .parquet(_count_path(store_dir))
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
     return process_batch
 
@@ -100,8 +95,8 @@ def make_count_processor(
 def read_counts(spark: SparkSession, store_dir: str) -> DataFrame:
     """The merged totals: ``key cols..., cnt``. One groupBy-sum over
     the partials (which compaction keeps at ≤ keep_last + 1 rows per
-    key); empty frame with no schema knowledge is impossible — the
-    store must exist (write a batch first)."""
+    key). The store must exist: it is created by the first batch with
+    a non-empty partial."""
     df = spark.read.parquet(_count_path(store_dir))
     keys = [c for c in df.columns if c not in ("cnt", "__batch_id", "__bucket")]
     return df.groupBy(*keys).agg(F.sum("cnt").alias("cnt"))
@@ -179,6 +174,43 @@ def vocab_snapshot(
     )
 
 
+def _stream_token_store(
+    spark: SparkSession,
+    landing_dir: str,
+    store_dir: str,
+    checkpoint_dir: str,
+    schema,
+    text_col: str,
+    n_buckets: int,
+    max_files_per_trigger: int,
+    available_now: bool,
+    trigger_seconds: int | None,
+    per_doc_distinct: bool,
+) -> StreamingQuery:
+    """Token count store over arriving shards: each batch's lowercased
+    space-split tokens (each doc's DISTINCT tokens when
+    ``per_doc_distinct``) feed the count processor. The token explode
+    runs inside the batch aggregate — the store never sees a corpus
+    row, only per-batch ``(token, cnt)`` partials."""
+    proc = make_count_processor(store_dir, ["token"], n_buckets=n_buckets)
+
+    def process_batch(batch: DataFrame, batch_id: int) -> None:
+        toks = F.split(F.lower(F.col(text_col)), " ")
+        if per_doc_distinct:
+            toks = F.array_distinct(toks)
+        proc(
+            batch.select(F.explode(toks).alias("token")).filter(
+                F.col("token") != ""
+            ),
+            batch_id,
+        )
+
+    return _start_stream(
+        spark, landing_dir, checkpoint_dir, process_batch, schema,
+        max_files_per_trigger, available_now, trigger_seconds,
+    )
+
+
 def stream_token_counts(
     spark: SparkSession,
     landing_dir: str,
@@ -194,31 +226,12 @@ def stream_token_counts(
     """readStream(document shards) → per-batch token-count partials →
     additive store. ``vocab_snapshot`` over the store then equals
     ``build_vocab`` over everything that has arrived (parity-pinned in
-    tests/test_aggstore.py). The token explode runs inside the batch
-    aggregate — the store never sees a corpus row, only per-batch
-    ``(token, cnt)`` partials."""
-    docs = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(landing_dir)
+    tests/test_aggstore.py)."""
+    return _stream_token_store(
+        spark, landing_dir, store_dir, checkpoint_dir, schema, text_col,
+        n_buckets, max_files_per_trigger, available_now, trigger_seconds,
+        per_doc_distinct=False,
     )
-    proc = make_count_processor(store_dir, ["token"], n_buckets=n_buckets)
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        toks = batch.select(
-            F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("token")
-        ).filter(F.col("token") != "")
-        proc(toks, batch_id)
-
-    writer = docs.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
 
 
 def stream_doc_frequencies(
@@ -245,29 +258,8 @@ def stream_doc_frequencies(
     (parity-pinned in tests/test_aggstore.py), assuming each doc_id
     arrives once (re-delivery within a replayed batch is handled by
     the store; cross-batch re-delivery is upstream dedup's job)."""
-    docs = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(landing_dir)
+    return _stream_token_store(
+        spark, landing_dir, store_dir, checkpoint_dir, schema, text_col,
+        n_buckets, max_files_per_trigger, available_now, trigger_seconds,
+        per_doc_distinct=True,
     )
-    proc = make_count_processor(store_dir, ["token"], n_buckets=n_buckets)
-
-    def process_batch(batch: DataFrame, batch_id: int) -> None:
-        toks = batch.select(
-            F.explode(
-                F.array_distinct(
-                    F.split(F.lower(F.col(text_col)), " ")
-                )
-            ).alias("token")
-        ).filter(F.col("token") != "")
-        proc(toks, batch_id)
-
-    writer = docs.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

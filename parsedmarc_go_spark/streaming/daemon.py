@@ -20,6 +20,12 @@ appending duplicates. (Plain `append` here would silently degrade to
 at-least-once across the five non-atomic writes.) Readers drop the
 bookkeeping column via `read_stream_table`.
 
+This module owns the streaming commit protocol every stage shares:
+`_overwrite_partitions` is the one per-batch write (it carries its own
+dynamic overwrite mode, so no caller touches the session's
+`partitionOverwriteMode`), and `_start_stream` is the one
+readStream → foreachBatch → checkpoint → trigger starter.
+
 Batch/stream parity is structural: foreachBatch runs the identical
 post-extraction DAG the batch path uses (ingest.parse_extracted), so
 tests assert table equality.
@@ -47,16 +53,67 @@ STREAM_TABLES = (
 )
 
 
-def _write_table(df: DataFrame, out_dir: str, name: str, batch_id: int) -> None:
-    """One idempotent table commit: dynamic partition overwrite scoped
-    to THIS batch's __batch_id partition. Module-level (not a closure)
-    so the crash test can fail-inject between the five table writes."""
+def _overwrite_partitions(df: DataFrame, path: str, *part_cols: str) -> None:
+    """The streaming commit: replace exactly the partitions ``df``
+    holds and touch no other. The dynamic overwrite mode is a per-write
+    option, so the commit is correct under any session
+    ``partitionOverwriteMode`` — a STATIC session would otherwise
+    delete every earlier batch's partition."""
     (
-        df.withColumn("__batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("__batch_id")
-        .parquet(os.path.join(out_dir, name))
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*part_cols)
+        .parquet(path)
     )
+
+
+def _write_table(df: DataFrame, out_dir: str, name: str, batch_id: int) -> None:
+    """One idempotent table commit scoped to THIS batch's __batch_id
+    partition. Module-level (not a closure) so the crash test can
+    fail-inject between the five table writes."""
+    _overwrite_partitions(
+        df.withColumn("__batch_id", F.lit(batch_id)),
+        os.path.join(out_dir, name),
+        "__batch_id",
+    )
+
+
+def _start_stream(
+    spark: SparkSession,
+    landing_dir: str,
+    checkpoint_dir: str,
+    process_batch,
+    schema,
+    max_files_per_trigger: int,
+    available_now: bool,
+    trigger_seconds: int | None,
+    fmt: str = "parquet",
+    columns: tuple[str, ...] = (),
+) -> StreamingQuery:
+    """The one stream starter: readStream(``fmt``) over every file under
+    ``landing_dir`` (``maxFilesPerTrigger`` is the backpressure knob),
+    optionally projected to ``columns``, → foreachBatch(``process_batch``)
+    checkpointed at ``checkpoint_dir``. Trigger: ``available_now`` drains
+    what has landed and stops; else ``trigger_seconds`` sets a
+    processing-time interval; else (None/0) micro-batches run back to
+    back."""
+    src = (
+        spark.readStream.format(fmt)
+        .schema(schema)
+        .option("recursiveFileLookup", "true")
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .load(landing_dir)
+    )
+    if columns:
+        src = src.select(*columns)
+    writer = src.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
 
 
 def make_batch_processor(
@@ -93,9 +150,7 @@ def make_batch_processor(
 
         from parsedmarc_go_spark.functions.enrich import enrich_records
 
-        spark = batch.sparkSession
         extracted = extract_reports(batch).cache()
-        prev_overwrite_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         try:
             # `as_of` pins the ingest clock: with it set, a crash-and-
             # replay of batch N rewrites byte-identical files (created_at
@@ -109,7 +164,6 @@ def make_batch_processor(
                 )
             # idempotent commit: a replay of batch N replaces batch N's
             # files and touches nothing else (see _write_table)
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             for name in STREAM_TABLES:
                 _write_table(getattr(res, name), out_dir, name, batch_id)
             if metrics_path:
@@ -124,7 +178,6 @@ def make_batch_processor(
                         totals[key] = totals.get(key, 0.0) + v
                 write_metrics_textfile(totals, metrics_path)
         finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_overwrite_mode)
             extracted.unpersist()
 
     return process_batch
@@ -151,20 +204,15 @@ def stream_ingest(
     """readStream(binaryFile) → extraction/parse DAG → foreachBatch
     appending the five flat Parquet tables + rejects quarantine.
     `as_of` (optional) pins the ingest clock — see normalize.ingest_ts."""
-    files = (
-        spark.readStream.format("binaryFile")
-        .schema(BINARY_FILE_SCHEMA)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .load(landing_dir)
-        .select("path", "length", "content")
+    return _start_stream(
+        spark,
+        landing_dir,
+        checkpoint_dir,
+        make_batch_processor(out_dir, enrichment, metrics_path, as_of),
+        BINARY_FILE_SCHEMA,
+        max_files_per_trigger,
+        available_now,
+        trigger_seconds,
+        fmt="binaryFile",
+        columns=("path", "length", "content"),
     )
-
-    writer = files.writeStream.foreachBatch(
-        make_batch_processor(out_dir, enrichment, metrics_path, as_of)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

@@ -14,8 +14,8 @@ store:
 - **store** = a parquet table of paragraph (or whole-document) sha256
   digests under ``<store_dir>/fingerprints``, partitioned by
   ``(__batch_id, __bucket)`` — ``__batch_id`` is the daemon's
-  idempotent-overwrite unit (streaming/daemon.py:54-64) and
-  ``__bucket = pmod(xxhash64(ph), n_buckets)`` co-partitions the
+  idempotent-overwrite unit (streaming/daemon.py::_overwrite_partitions)
+  and ``__bucket = pmod(xxhash64(ph), n_buckets)`` co-partitions the
   digests on their own hash (the ANN-index directory layout,
   storage.py:compact_partitioned_index) so probes read PRUNED. Only
   digests are stored, never text: 32 bytes per distinct paragraph
@@ -62,16 +62,16 @@ store:
   partition — so a crash-and-replay of batch N sees exactly the store
   state N saw the first time and rewrites identical files.
 - **maintenance** = ``compact_fingerprint_store`` folds old batch
-  partitions into a single base partition (``__batch_id = -1``) with
-  the crash-safe directory swap (storage.py:swap_directory), bounding
-  file and partition counts. The fold is range-repartitioned on
-  ``(partition cols, ph)`` into ``~total_bytes/target_file_mb`` tasks,
-  so the unbounded base partition is written by MANY size-proportional
-  tasks (round-10 fix: a hash repartition on ``__batch_id`` alone sent
-  every folded row — nearly all carrying the constant ``-1`` — through
-  ONE task). Structured Streaming replays at most the most recent
-  uncommitted batch, so folding everything older than ``keep_last``
-  batches loses no replay granularity.
+  partitions into negative-id RUN partitions and merges runs only when
+  a size ratio triggers (an LSM discipline: O(N log N) total rewrite,
+  not a whole-store rewrite per fold), committing each step with one
+  atomic meta swap. Each run is range-repartitioned on
+  ``(partition cols, ph)`` into ``~bytes/target_file_mb`` tasks, so an
+  unbounded run is written by MANY size-proportional tasks (round-10
+  fix: a hash repartition on the constant run id sent every row
+  through ONE task). Structured Streaming replays at most the most
+  recent uncommitted batch, so folding everything older than
+  ``keep_last`` batches loses no replay granularity.
 
 100 TB shape: per batch the store pays one PRUNED scan (the batch's
 buckets only) streamed through a broadcast semi-join — no store-side
@@ -100,12 +100,15 @@ from parsedmarc_go_spark.operators.dedup import (
     paragraph_keys,
 )
 from parsedmarc_go_spark.storage import _parquet_file_stats, hadoop_fs, swap_directory
-from parsedmarc_go_spark.streaming.daemon import _write_table
+from parsedmarc_go_spark.streaming.daemon import (
+    _overwrite_partitions,
+    _start_stream,
+    _write_table,
+)
 
 STORE_TABLE = "fingerprints"
 BLOOM_TABLE = "fingerprints.bloom"
 VEC_STORE_TABLE = "vectors"
-DEDUP_TABLES = ("docs_deduped",)
 _EMPTY_STORE_SCHEMA = "ph string, __batch_id bigint, __bucket int"
 DEFAULT_STORE_BUCKETS = 64
 # The probe-side broadcast bound is expressed in BYTES, not rows: a
@@ -397,6 +400,31 @@ def _store_exists(spark: SparkSession, store_dir: str) -> bool:
     return bool(fs.exists(hpath))
 
 
+def _ensure_store_meta(
+    spark: SparkSession,
+    store_dir: str,
+    n_buckets: int,
+    bloom_m: int = 0,
+    bloom_k: int = 0,
+) -> dict:
+    """The store's pinned parameters, pinning them first when the meta
+    sidecar is missing: a new store gets the given width and Bloom
+    sizing. A store that PREDATES the sidecar (pre-bucketed layout)
+    must not be mistaken for a new one — pinning the given width would
+    append ``__bucket`` partitions into the flat directory (mixed
+    partition depths break the next read) and a Bloom that lacks every
+    pre-upgrade digest would wave duplicates through as false
+    negatives (ADVICE r10). It is pinned bucketless and bloomless
+    instead, which probe, append and compaction all handle."""
+    meta = _read_meta_dict(spark, store_dir)
+    if meta is None:
+        if _store_exists(spark, store_dir):
+            n_buckets, bloom_m, bloom_k = 0, 0, 0
+        _write_store_meta(spark, store_dir, n_buckets, bloom_m, bloom_k)
+        meta = _read_meta_dict(spark, store_dir)
+    return meta
+
+
 def read_fingerprints(
     spark: SparkSession, store_dir: str, exclude_batch_id: int | None = None
 ) -> DataFrame:
@@ -442,6 +470,24 @@ def read_fingerprints(
     return df
 
 
+def _prune_buckets(
+    store: DataFrame, keys: DataFrame, n_buckets: int | None, col: str = "ph"
+) -> DataFrame:
+    """``store`` restricted to the ``__bucket`` directories that
+    ``keys[col]`` hash into — a bounded collect of at most
+    ``n_buckets`` ints that prunes the store scan. Unpruned for a
+    bucketless (legacy) store."""
+    if not n_buckets or "__bucket" not in store.columns:
+        return store
+    buckets = [
+        r[0]
+        for r in keys.select(_bucket_expr(n_buckets, col).alias("b"))
+        .distinct()
+        .collect()
+    ]
+    return store.filter(F.col("__bucket").isin(buckets))
+
+
 def probe_store(
     seen: DataFrame,
     keys: DataFrame,
@@ -464,16 +510,7 @@ def probe_store(
     construction (asserted in tests, not recomputed per batch), and a
     semi-join tolerates duplicates regardless. ``broadcast_probe=False``
     is the over-sized-batch fallback (shuffle semi-join)."""
-    if n_buckets and "__bucket" in seen.columns:
-        # bounded collect: at most n_buckets ints, derived from the
-        # batch's own digests — prunes the store scan's directories
-        buckets = [
-            r[0]
-            for r in keys.select(_bucket_expr(n_buckets).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        seen = seen.filter(F.col("__bucket").isin(buckets))
+    seen = _prune_buckets(seen, keys, n_buckets)
     probe = keys.select("ph")
     if broadcast_probe:
         probe = F.broadcast(probe)
@@ -506,11 +543,7 @@ def _write_store(
     if n_buckets:
         out = out.withColumn("__bucket", _bucket_expr(n_buckets, bucket_col))
         part_cols.append("__bucket")
-    (
-        out.write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(os.path.join(store_dir, STORE_TABLE))
-    )
+    _overwrite_partitions(out, os.path.join(store_dir, STORE_TABLE), *part_cols)
 
 
 def _load_or_train_centroids(
@@ -654,12 +687,13 @@ def _process_semdedup_batch(
         .drop("__keep")
     )
     _write_table(survivors.drop("cell"), out_dir, "docs_deduped", batch_id)
-    (
-        survivors.select(id_col, vec_col, "cell")
-        .withColumn("__batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .partitionBy("__batch_id", "cell")
-        .parquet(vec_path)
+    _overwrite_partitions(
+        survivors.select(id_col, vec_col, "cell").withColumn(
+            "__batch_id", F.lit(batch_id)
+        ),
+        vec_path,
+        "__batch_id",
+        "cell",
     )
     assigned.unpersist()
     batch.unpersist()
@@ -686,8 +720,8 @@ def make_dedup_processor(
     minhash_max_bucket: int | None = None,
 ):
     """foreachBatch body for incremental dedup, factored out (the
-    curation-stage pattern, streaming/curation.py:45) so idempotence
-    and stream-vs-batch parity are directly testable.
+    curation-stage pattern, streaming/curation.py::make_curation_processor)
+    so idempotence and stream-vs-batch parity are directly testable.
 
     ``mode="paragraph"``: CCNet paragraph dedup — the output table has
     the paragraph_dedup row shape (n_paras / n_kept /
@@ -769,201 +803,163 @@ def make_dedup_processor(
             f"'substring' or 'semdedup', got {mode!r}"
         )
 
-    def _process_batch_impl(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            if mode == "semdedup":
-                _process_semdedup_batch(
-                    batch, batch_id, out_dir, store_dir, id_col, vec_col,
-                    semdedup_tau, semdedup_n_clusters, semdedup_chunk_rows,
-                )
-                return
-            meta = _read_meta_dict(spark, store_dir)
-            if meta is None and _store_exists(spark, store_dir):
-                # A store that predates the meta sidecar (pre-bucketed
-                # layout): treating it as CREATION would append
-                # __bucket partitions into the flat directory (mixed
-                # partition depths break the next read) and pin a
-                # Bloom sidecar that lacks every pre-upgrade digest —
-                # false negatives would wave duplicates through
-                # (ADVICE r10). Pin it bucketless/bloomless instead:
-                # probe_store and compaction both handle that layout,
-                # so legacy stores keep probing exactly as before.
-                store_buckets, bm, bk = 0, 0, 0
-                _write_store_meta(spark, store_dir, 0, 0, 0)
-            elif meta is None:
-                bm, bk = (
-                    _bloom_params(bloom_expected_items, bloom_fpp)
-                    if bloom
-                    else (0, 0)
-                )
-                store_buckets = n_buckets
-                _write_store_meta(spark, store_dir, store_buckets, bm, bk)
-            else:
-                store_buckets = int(meta["n_buckets"])
-                bm = int(meta.get("bloom_m", 0))
-                bk = int(meta.get("bloom_k", 0))
-            seen_full = read_fingerprints(
-                spark, store_dir, exclude_batch_id=batch_id
-            )
-            batch = batch.persist()  # scanned by the probe keys, the
-            # output and the store append
-            extra_persists: list[DataFrame] = []
-            # --- the batch's full digest set (probe side) ---
-            if mode == "paragraph":
-                probe_keys = paragraph_keys(
-                    batch, id_col, text_col, sep=sep, normalize=normalize
-                )
-            elif mode == "substring":
-                from parsedmarc_go_spark.operators.substring import gram_keys
-
-                probe_keys = gram_keys(
-                    batch, id_col, text_col, k=substring_k
-                ).select(F.col("gh").alias("ph"))
-            elif mode == "minhash":
-                # the shingle pipeline reads the column literally named
-                # "text" (operators/dedup.py:_shingle_stream)
-                mb = (
-                    batch
-                    if text_col == "text"
-                    else batch.withColumnRenamed(text_col, "text")
-                )
-                sigs = minhash_band_signatures(mb, id_col).select(
-                    F.col("doc").alias(id_col),
-                    F.concat_ws(":", "band", "sig").alias("ph"),
-                ).persist()
-                extra_persists.append(sigs)
-                probe_keys = sigs.select("ph").distinct()
-            else:
-                fps = batch.withColumn(
-                    "__ph", F.sha2(normalized_text(text_col), 256)
-                )
-                probe_keys = fps.select(F.col("__ph").alias("ph")).distinct()
-            probe_keys = probe_keys.persist()
-            extra_persists.append(probe_keys)
-            # Bloom pre-probe: shrink the exact probe's key set to the
-            # digests history cannot rule out. Candidates ⊆ probe_keys,
-            # so the exact probe below — which alone decides membership
-            # — sees a subset and returns the identical seen_small.
-            candidates = probe_keys
-            bloom_words = (
-                read_bloom_words(spark, store_dir) if bm else None
-            )
-            if bloom_words is not None:
-                candidates = bloom_prefilter(
-                    probe_keys, bloom_words, bm, bk,
-                    broadcast=bm <= BLOOM_BROADCAST_MAX_BITS,
-                ).persist()
-                extra_persists.append(candidates)
-            # bounded action: the digest count decides broadcast vs
-            # shuffle probe; candidates is persisted and probe_keys is
-            # reused for the store append, so this costs one O(batch)
-            # pass
-            n_keys = candidates.count()
-            # seen_small = store ∩ batch digests, batch-bounded; the
-            # localCheckpoint materializes it BEFORE the store write so
-            # the write never overwrites a path its own plan is reading
-            seen_small = probe_store(
-                seen_full,
-                candidates,
-                store_buckets,
-                broadcast_probe=n_keys <= broadcast_probe_max_keys,
-            ).transform(tracked_local_checkpoint)
-            # --- mode-specific dedup against the batch-bounded slice ---
-            if mode == "paragraph":
-                out = paragraph_dedup(
-                    batch, id_col, text_col, sep=sep,
-                    normalize=normalize, seen_keys=seen_small,
-                )
-                append_keys = probe_keys
-            elif mode == "substring":
-                from parsedmarc_go_spark.operators.substring import (
-                    substring_dedup,
-                )
-
-                out = substring_dedup(
-                    batch,
-                    id_col,
-                    text_col,
-                    k=substring_k,
-                    seen_keys=seen_small.select(F.col("ph").alias("gh")),
-                )
-                append_keys = probe_keys
-            elif mode == "minhash":
-                from parsedmarc_go_spark.operators.dedup import minhash_lsh_pairs
-
-                near_seen = (
-                    sigs.join(seen_small, "ph").select(id_col).distinct()
-                )
-                remaining = mb.join(near_seen, id_col, "left_anti").persist()
-                extra_persists.append(remaining)
-                # within-batch: exact-verified pairs -> components ->
-                # keep the smallest id of each near-dup group
-                pairs = minhash_lsh_pairs(
-                    remaining, id_col, max_bucket=minhash_max_bucket
-                )
-                dropped = (
-                    neardup_clusters(
-                        pairs.select(
-                            F.col("doc_a").alias("doc_a"),
-                            F.col("doc_b").alias("doc_b"),
-                        )
-                    )
-                    .filter(F.col("doc") != F.col("cluster_id"))
-                    .select(F.col("doc").alias(id_col))
-                )
-                out = remaining.join(dropped, id_col, "left_anti")
-                if text_col != "text":
-                    out = out.withColumnRenamed("text", text_col)
-                append_keys = (
-                    sigs.join(out.select(id_col), id_col)
-                    .select("ph")
-                    .distinct()
-                )
-            else:
-                w = Window.partitionBy("__ph").orderBy(F.col(id_col))
-                out = (
-                    fps.join(
-                        seen_small.select(F.col("ph").alias("__ph"))
-                        .withColumn("__seen", F.lit(True)),
-                        "__ph",
-                        "left",
-                    )
-                    .withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__seen").isNull() & (F.col("__rn") == 1))
-                    .drop("__ph", "__seen", "__rn")
-                )
-                append_keys = probe_keys
-            # only digests the store has never seen are appended;
-            # seen_small is already checkpointed, so this plan never
-            # reads the store path it is about to overwrite
-            new_keys = append_keys.join(seen_small, "ph", "left_anti").persist()
-            extra_persists.append(new_keys)
-            _write_table(out, out_dir, "docs_deduped", batch_id)
-            if bm:
-                # bloom BEFORE store: a crash between the two leaves
-                # false positives only (see update_bloom)
-                update_bloom(spark, new_keys, store_dir, bm, bk)
-            _write_store(new_keys, store_dir, batch_id, store_buckets)
-            for df in extra_persists:
-                df.unpersist()
-            batch.unpersist()
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
+    # caching.scope: operators called inside the batch (minhash mode's
+    # minhash_lsh_pairs scoped-persists two candidate frames per call)
+    # register their intermediates with the microbatch scope, released
+    # at batch end — a pure streaming session never enters a gate
+    # builder, so without the scope those frames would accrete in the
+    # CacheManager for the session lifetime (ADVICE r15).
+    # extra_persists below covers only this module's own persists,
+    # never the operators'.
+    @caching_scope()
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        # caching.scope: operators called inside the batch (minhash mode's
-        # minhash_lsh_pairs scoped-persists two candidate frames per call)
-        # register their intermediates with the microbatch scope, released
-        # here at batch end — a pure streaming session never enters a gate
-        # builder, so without the scope those frames would accrete in the
-        # CacheManager for the session lifetime (ADVICE r15).
-        # extra_persists above covers only this module's own persists,
-        # never the operators'.
-        with caching_scope():
-            _process_batch_impl(batch, batch_id)
+        spark = batch.sparkSession
+        if mode == "semdedup":
+            _process_semdedup_batch(
+                batch, batch_id, out_dir, store_dir, id_col, vec_col,
+                semdedup_tau, semdedup_n_clusters, semdedup_chunk_rows,
+            )
+            return
+        bm, bk = (
+            _bloom_params(bloom_expected_items, bloom_fpp) if bloom else (0, 0)
+        )
+        meta = _ensure_store_meta(spark, store_dir, n_buckets, bm, bk)
+        store_buckets = int(meta["n_buckets"])
+        bm = int(meta.get("bloom_m", 0))
+        bk = int(meta.get("bloom_k", 0))
+        seen_full = read_fingerprints(spark, store_dir, exclude_batch_id=batch_id)
+        batch = batch.persist()  # scanned by the probe keys, the
+        # output and the store append
+        extra_persists: list[DataFrame] = []
+        # --- the batch's full digest set (probe side) ---
+        if mode == "paragraph":
+            probe_keys = paragraph_keys(
+                batch, id_col, text_col, sep=sep, normalize=normalize
+            )
+        elif mode == "substring":
+            from parsedmarc_go_spark.operators.substring import gram_keys
+
+            probe_keys = gram_keys(
+                batch, id_col, text_col, k=substring_k
+            ).select(F.col("gh").alias("ph"))
+        elif mode == "minhash":
+            # the shingle pipeline reads the column literally named
+            # "text" (operators/dedup.py:_shingle_stream)
+            mb = (
+                batch
+                if text_col == "text"
+                else batch.withColumnRenamed(text_col, "text")
+            )
+            sigs = minhash_band_signatures(mb, id_col).select(
+                F.col("doc").alias(id_col),
+                F.concat_ws(":", "band", "sig").alias("ph"),
+            ).persist()
+            extra_persists.append(sigs)
+            probe_keys = sigs.select("ph").distinct()
+        else:
+            fps = batch.withColumn("__ph", F.sha2(normalized_text(text_col), 256))
+            probe_keys = fps.select(F.col("__ph").alias("ph")).distinct()
+        probe_keys = probe_keys.persist()
+        extra_persists.append(probe_keys)
+        # Bloom pre-probe: shrink the exact probe's key set to the
+        # digests history cannot rule out. Candidates ⊆ probe_keys,
+        # so the exact probe below — which alone decides membership
+        # — sees a subset and returns the identical seen_small.
+        candidates = probe_keys
+        bloom_words = read_bloom_words(spark, store_dir) if bm else None
+        if bloom_words is not None:
+            candidates = bloom_prefilter(
+                probe_keys, bloom_words, bm, bk,
+                broadcast=bm <= BLOOM_BROADCAST_MAX_BITS,
+            ).persist()
+            extra_persists.append(candidates)
+        # bounded action: the digest count decides broadcast vs
+        # shuffle probe; candidates is persisted and probe_keys is
+        # reused for the store append, so this costs one O(batch)
+        # pass
+        n_keys = candidates.count()
+        # seen_small = store ∩ batch digests, batch-bounded; the
+        # localCheckpoint materializes it BEFORE the store write so
+        # the write never overwrites a path its own plan is reading
+        seen_small = probe_store(
+            seen_full,
+            candidates,
+            store_buckets,
+            broadcast_probe=n_keys <= broadcast_probe_max_keys,
+        ).transform(tracked_local_checkpoint)
+        # --- mode-specific dedup against the batch-bounded slice ---
+        if mode == "paragraph":
+            out = paragraph_dedup(
+                batch, id_col, text_col, sep=sep,
+                normalize=normalize, seen_keys=seen_small,
+            )
+            append_keys = probe_keys
+        elif mode == "substring":
+            from parsedmarc_go_spark.operators.substring import substring_dedup
+
+            out = substring_dedup(
+                batch,
+                id_col,
+                text_col,
+                k=substring_k,
+                seen_keys=seen_small.select(F.col("ph").alias("gh")),
+            )
+            append_keys = probe_keys
+        elif mode == "minhash":
+            from parsedmarc_go_spark.operators.dedup import minhash_lsh_pairs
+
+            near_seen = sigs.join(seen_small, "ph").select(id_col).distinct()
+            remaining = mb.join(near_seen, id_col, "left_anti").persist()
+            extra_persists.append(remaining)
+            # within-batch: exact-verified pairs -> components ->
+            # keep the smallest id of each near-dup group
+            pairs = minhash_lsh_pairs(remaining, id_col, max_bucket=minhash_max_bucket)
+            dropped = (
+                neardup_clusters(
+                    pairs.select(
+                        F.col("doc_a").alias("doc_a"),
+                        F.col("doc_b").alias("doc_b"),
+                    )
+                )
+                .filter(F.col("doc") != F.col("cluster_id"))
+                .select(F.col("doc").alias(id_col))
+            )
+            out = remaining.join(dropped, id_col, "left_anti")
+            if text_col != "text":
+                out = out.withColumnRenamed("text", text_col)
+            append_keys = (
+                sigs.join(out.select(id_col), id_col)
+                .select("ph")
+                .distinct()
+            )
+        else:
+            w = Window.partitionBy("__ph").orderBy(F.col(id_col))
+            out = (
+                fps.join(
+                    seen_small.select(F.col("ph").alias("__ph"))
+                    .withColumn("__seen", F.lit(True)),
+                    "__ph",
+                    "left",
+                )
+                .withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__seen").isNull() & (F.col("__rn") == 1))
+                .drop("__ph", "__seen", "__rn")
+            )
+            append_keys = probe_keys
+        # only digests the store has never seen are appended;
+        # seen_small is already checkpointed, so this plan never
+        # reads the store path it is about to overwrite
+        new_keys = append_keys.join(seen_small, "ph", "left_anti").persist()
+        extra_persists.append(new_keys)
+        _write_table(out, out_dir, "docs_deduped", batch_id)
+        if bm:
+            # bloom BEFORE store: a crash between the two leaves
+            # false positives only (see update_bloom)
+            update_bloom(spark, new_keys, store_dir, bm, bk)
+        _write_store(new_keys, store_dir, batch_id, store_buckets)
+        for df in extra_persists:
+            df.unpersist()
+        batch.unpersist()
 
     return process_batch
 
@@ -997,13 +993,10 @@ def stream_dedup(
     """readStream(parquet document shards) → dedup-against-store →
     foreachBatch writing ``docs_deduped`` and appending the store.
     Same source/trigger knobs as the curation stage."""
-    docs = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(landing_dir)
-    )
-    writer = docs.writeStream.foreachBatch(
+    return _start_stream(
+        spark,
+        landing_dir,
+        checkpoint_dir,
         make_dedup_processor(
             out_dir, store_dir, mode, id_col, text_col, sep, normalize,
             substring_k, n_buckets,
@@ -1012,13 +1005,12 @@ def stream_dedup(
             semdedup_chunk_rows=semdedup_chunk_rows,
             bloom=bloom, bloom_expected_items=bloom_expected_items,
             bloom_fpp=bloom_fpp, minhash_max_bucket=minhash_max_bucket,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+        ),
+        schema,
+        max_files_per_trigger,
+        available_now,
+        trigger_seconds,
+    )
 
 
 def _batch_partition_dir(store_dir: str, batch_id: int) -> str:
@@ -1087,7 +1079,7 @@ def _list_partition_ids(spark: SparkSession, store_dir: str) -> list[int]:
     return sorted(ids)
 
 
-def compact_fingerprint_store_leveled(
+def compact_fingerprint_store(
     spark: SparkSession,
     store_dir: str,
     keep_last: int = 2,
@@ -1097,12 +1089,11 @@ def compact_fingerprint_store_leveled(
     stats: dict | None = None,
     final: bool = False,
 ) -> tuple[int, int]:
-    """Generational (LSM-discipline) fold (round-16, VERDICT r15 task
-    5): the flat ``compact_fingerprint_store`` rewrites the ENTIRE
-    store every fold — O(store) per compaction, quadratic total
-    rewrite over a long stream's life. Here old batch partitions fold
-    into a NEW negative-id run, and runs merge only when a size ratio
-    triggers, so total rewrite work is O(N log N):
+    """Generational (LSM-discipline) fold of the fingerprint store
+    (round-16, VERDICT r15 task 5): old batch partitions fold into a
+    NEW negative-id run, and runs merge only when a size ratio
+    triggers, so total rewrite work over a stream's life is O(N log N)
+    instead of the O(store)-per-fold of rewriting the whole store:
 
     - **fold**: batches older than the newest ``keep_last`` are
       rewritten as one new run partition ``__batch_id=-K``.
@@ -1111,6 +1102,15 @@ def compact_fingerprint_store_leveled(
       worth folding into the base), or more than ``max_runs`` runs
       exist (probe-side directory count discipline), runs merge into
       one.
+
+    Safe because Structured Streaming replays at most the most recent
+    uncommitted batch: a batch old enough to fold can never replay, so
+    its partition identity is no longer needed — only its digests'
+    MEMBERSHIP, which every step preserves exactly. Each run is
+    range-repartitioned on ``(partition cols, ph)`` into
+    ``~bytes/target_file_mb`` tasks, so an unbounded run is written by
+    many size-proportional writers while each bucket directory's files
+    stay chunky and ph-ordered.
 
     Crash-safety is a single atomic commit point per step: the run
     partition is written tmp-then-renamed, THEN the meta sidecar
@@ -1122,11 +1122,16 @@ def compact_fingerprint_store_leveled(
     is untouched: only batches older than ``keep_last`` fold, and a
     replayed batch id > watermark by construction.
 
+    Older layouts compact too: a store without a meta sidecar
+    (pre-bucketed) is first pinned bucketless, as the dedup processor
+    pins it (``_ensure_store_meta``), and a store whose meta has no
+    ``runs`` record (its ``-1`` base written by the earlier
+    whole-store fold) has every negative partition on disk taken as a
+    committed run.
+
     ``stats`` (optional) receives ``{"bytes_rewritten", "runs",
     "folded_watermark", "steps"}`` — the rewrite-cost accounting the
     SCALE.md curve is built from. Returns (files_before, files_after).
-    Legacy stores without a meta sidecar fall back to the flat fold
-    (their layout predates the run/watermark protocol).
 
     ``keep_last`` must stay ≥ 1 while the stream is LIVE (ADVICE r16):
     folding the newest batch moves its digests into a negative-id run
@@ -1143,21 +1148,17 @@ def compact_fingerprint_store_leveled(
             "unexcludable). Pass final=True only after the stream's last "
             "batch has committed."
         )
-    meta = _read_meta_dict(spark, store_dir)
-    if meta is None:
-        return compact_fingerprint_store(
-            spark, store_dir, keep_last=keep_last,
-            target_file_mb=target_file_mb, final=final,
-        )
     if not _store_exists(spark, store_dir):
-        # meta pinned at creation but every batch so far appended zero
-        # digests (_write_store skips empty frames) — nothing to fold
+        # no batch has appended a digest yet (_write_store skips empty
+        # frames), whether or not creation pinned the meta — nothing
+        # to fold
         if stats is not None:
             stats.update(
                 {"bytes_rewritten": 0, "runs": [], "folded_watermark": None,
                  "steps": 0}
             )
         return 0, 0
+    meta = _ensure_store_meta(spark, store_dir, 0)
     path = os.path.join(store_dir, STORE_TABLE)
     files_before, _ = _parquet_file_stats(spark, path)
     w = (
@@ -1170,8 +1171,8 @@ def compact_fingerprint_store_leveled(
     )
     on_disk = _list_partition_ids(spark, store_dir)
     if committed_runs is None:
-        # first leveled compaction of a store with history: any
-        # existing negative partition is a committed flat base
+        # no runs record yet (never compacted, or only by the earlier
+        # whole-store fold): negatives on disk are committed, e.g. -1
         committed_runs = [i for i in on_disk if i < 0]
     # --- GC: uncommitted run orphans + folded-but-undeleted batches ---
     for i in on_disk:
@@ -1246,80 +1247,4 @@ def compact_fingerprint_store_leveled(
         stats["runs"] = sorted(committed_runs)
         stats["folded_watermark"] = w
         stats["steps"] = steps
-    return files_before, files_after
-
-
-def compact_fingerprint_store(
-    spark: SparkSession,
-    store_dir: str,
-    keep_last: int = 2,
-    target_file_mb: float = 128,
-    final: bool = False,
-) -> tuple[int, int]:
-    """Fold every fingerprint partition older than the newest
-    ``keep_last`` batches into the single base partition
-    ``__batch_id = -1``, rewritten at ``target_file_mb`` granularity
-    and swapped in crash-safe (storage.py:swap_directory).
-
-    Safe because Structured Streaming replays at most the most recent
-    uncommitted batch: a batch old enough to be folded can never replay,
-    so its partition identity is no longer needed for idempotence —
-    only its digests' MEMBERSHIP, which the fold preserves exactly.
-
-    The rewrite is RANGE-repartitioned on ``(partition cols, ph)`` into
-    ``~total_bytes/target_file_mb`` tasks: the folded base partition is
-    unbounded (unlike the √N-bounded IVF cells of
-    storage.py:compact_partitioned_index, where one-task-per-partition
-    is correct), so a hash repartition on the partition column alone —
-    nearly every folded row carries the constant ``-1`` — would push
-    the whole store through ONE task. Ranges over ``ph`` split the base
-    partition across many size-proportional writers while keeping each
-    bucket directory's files chunky and ph-ordered (round-10 fix,
-    VERDICT r9 finding 1). Returns ``(files_before, files_after)``;
-    no-op when nothing is old enough to fold.
-
-    Same live-stream guard as the leveled compactor (ADVICE r16):
-    ``keep_last=0`` folds the newest batch's digests where a replay
-    cannot exclude them, so it requires ``final=True`` (end-of-stream
-    only). The docstring safety argument above explicitly assumes
-    folded batches never replay — the guard makes that assumption
-    enforced instead of assumed."""
-    if keep_last < 1 and not final:
-        raise ValueError(
-            "keep_last must be >= 1 on a live stream: folding the newest "
-            "batch breaks replay idempotence. Pass final=True only after "
-            "the stream's last batch has committed."
-        )
-    path = os.path.join(store_dir, STORE_TABLE)
-    df = spark.read.parquet(path)
-    # bounded collect: one value per micro-batch partition, not per row
-    batches = sorted(
-        r[0] for r in df.select("__batch_id").distinct().collect() if r[0] >= 0
-    )
-    fold = batches[:-keep_last] if keep_last > 0 else batches
-    if not fold:
-        files_before, _ = _parquet_file_stats(spark, path)
-        return files_before, files_before
-    files_before, total_bytes = _parquet_file_stats(spark, path)
-    n_tasks = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    tmp = path.rstrip("/") + ".compacting"
-    folded = df.withColumn(
-        "__batch_id",
-        F.when(F.col("__batch_id").isin([-1, *fold]), F.lit(-1)).otherwise(
-            F.col("__batch_id")
-        ),
-    )
-    part_cols = ["__batch_id"] + (
-        ["__bucket"] if "__bucket" in df.columns else []
-    )
-    (
-        folded.repartitionByRange(
-            n_tasks, *[F.col(c) for c in part_cols], F.col("ph")
-        )
-        .write.mode("overwrite")
-        .partitionBy(*part_cols)
-        .parquet(tmp)
-    )
-    swap_directory(spark, tmp, path)
-    files_after, _ = _parquet_file_stats(spark, path)
     return files_before, files_after

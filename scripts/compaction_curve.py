@@ -1,12 +1,12 @@
-"""Rewrite-bytes curve: flat vs leveled fingerprint-store compaction
+"""Rewrite-bytes curve of the leveled fingerprint-store compactor
 (round-16, VERDICT r15 task 5).
 
 Simulates a long-running stream: N batches of fresh documents arrive;
-after every batch the store is compacted. The flat fold rewrites the
-whole store each time (O(N²) total bytes over the stream's life); the
-leveled fold writes each new fold as a run and merges into the base
-only when the size ratio triggers (O(N log N) total). The table this
-prints is the SCALE.md §round-16 artifact.
+after every batch the store is compacted. Each fold is written as a
+new run, and runs merge into the base only when the size ratio
+triggers, so total rewrite is O(N log N) over the stream's life. The
+whole-store fold it replaced rewrote everything each time (O(N²)); its
+numbers are the flat column of the SCALE.md §round-16 table.
 
 Usage: python scripts/compaction_curve.py [--batches 12] [--rows 4000]
 """
@@ -23,18 +23,17 @@ import tempfile
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def run(mode: str, n_batches: int, rows_per_batch: int, spark) -> dict:
+def run(n_batches: int, rows_per_batch: int, spark) -> dict:
     from pyspark.sql import functions as F
 
     from parsedmarc_go_spark.storage import _parquet_file_stats
     from parsedmarc_go_spark.streaming.dedup import (
         STORE_TABLE,
         compact_fingerprint_store,
-        compact_fingerprint_store_leveled,
         make_dedup_processor,
     )
 
-    root = tempfile.mkdtemp(prefix=f"cc_{mode}_")
+    root = tempfile.mkdtemp(prefix="cc_leveled_")
     out, store = os.path.join(root, "out"), os.path.join(root, "store")
     proc = make_dedup_processor(out, store)
     total_rewritten = 0
@@ -55,44 +54,19 @@ def run(mode: str, n_batches: int, rows_per_batch: int, spark) -> dict:
                 )
             )
             proc(docs, b)
-            path = os.path.join(store, STORE_TABLE)
-            before_files, before_bytes = _parquet_file_stats(spark, path)
-            if mode == "flat":
-                # detect the no-op fold (ADVICE r16: the first batch
-                # with keep_last=1 has nothing old enough to fold, and
-                # counting the untouched table as "rewritten" inflates
-                # the flat-vs-leveled ratio): if no file under the
-                # table changed, zero bytes moved
-                def _mtimes() -> dict[str, float]:
-                    return {
-                        os.path.join(dp, f): os.path.getmtime(
-                            os.path.join(dp, f)
-                        )
-                        for dp, _, fs in os.walk(path)
-                        for f in fs
-                    }
-
-                before_mtimes = _mtimes()
-                compact_fingerprint_store(spark, store, keep_last=1)
-                if _mtimes() == before_mtimes:
-                    rewritten = 0
-                else:
-                    # the flat fold rewrites the ENTIRE post-fold table
-                    _, after_bytes = _parquet_file_stats(spark, path)
-                    rewritten = after_bytes
-            else:
-                st: dict = {}
-                compact_fingerprint_store_leveled(
-                    spark, store, keep_last=1, stats=st
-                )
-                rewritten = st["bytes_rewritten"]
-            total_rewritten += rewritten
+            _, before_bytes = _parquet_file_stats(
+                spark, os.path.join(store, STORE_TABLE)
+            )
+            st: dict = {}
+            compact_fingerprint_store(spark, store, keep_last=1, stats=st)
+            total_rewritten += st["bytes_rewritten"]
             curve.append(
-                {"batch": b, "store_bytes": before_bytes, "rewritten": rewritten}
+                {"batch": b, "store_bytes": before_bytes,
+                 "rewritten": st["bytes_rewritten"]}
             )
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return {"mode": mode, "total_rewritten": total_rewritten, "curve": curve}
+    return {"mode": "leveled", "total_rewritten": total_rewritten, "curve": curve}
 
 
 def main() -> None:
@@ -106,16 +80,12 @@ def main() -> None:
         app_name="compaction-curve", master="local[8]", shuffle_partitions=8
     )
     spark.sparkContext.setLogLevel("ERROR")
-    results = [run(m, args.batches, args.rows, spark) for m in ("flat", "leveled")]
-    for r in results:
-        print(json.dumps(r))
-    flat, lev = results
+    r = run(args.batches, args.rows, spark)
+    print(json.dumps(r))
     print(
-        f"\n| batches | flat total rewritten | leveled total rewritten | ratio |\n"
-        f"|---|---|---|---|\n"
-        f"| {args.batches} | {flat['total_rewritten']:,} B "
-        f"| {lev['total_rewritten']:,} B "
-        f"| {flat['total_rewritten'] / max(1, lev['total_rewritten']):.2f}x |"
+        f"\n| batches | leveled total rewritten |\n"
+        f"|---|---|\n"
+        f"| {args.batches} | {r['total_rewritten']:,} B |"
     )
 
 

@@ -10,9 +10,29 @@ from pyspark.sql import functions as F
 
 SAMPLES = "/root/reference/samples"
 
-pytestmark = pytest.mark.skipif(
+needs_samples = pytest.mark.skipif(
     not os.path.isdir(SAMPLES), reason="reference sample corpus not available"
 )
+
+
+@pytest.fixture(scope="module")
+def payload_batch(spark, tmp_path_factory):
+    """A small binaryFile batch built here, no corpus needed: one
+    aggregate report as plain XML, a gzip copy of it, and one malformed
+    file."""
+    import gzip
+
+    from test_xml_defaults import MINIMAL
+
+    d = tmp_path_factory.mktemp("payloads")
+    (d / "minimal.xml").write_bytes(MINIMAL)
+    (d / "minimal.xml.gz").write_bytes(gzip.compress(MINIMAL))
+    (d / "broken.xml").write_bytes(b"<feedback><report_metadata>truncated")
+    return (
+        spark.read.format("binaryFile")
+        .load(str(d))
+        .select("path", "length", "content")
+    )
 
 
 @pytest.fixture(scope="module")
@@ -22,6 +42,7 @@ def ingested(spark):
     return ingest(spark, SAMPLES)
 
 
+@needs_samples
 def test_partitioned_write_and_pruning(spark, ingested, tmp_path):
     from parsedmarc_go_spark.storage import read_table, write_partitioned
 
@@ -37,6 +58,7 @@ def test_partitioned_write_and_pruning(spark, ingested, tmp_path):
     assert "PartitionFilters: [isnotnull(month" in plan, plan[:800]
 
 
+@needs_samples
 def test_bloom_filters_physically_written(spark, ingested, tmp_path):
     """storage.py claims parquet bloom filters on report_id; verify the
     claim on the READ side — a bloom filter parquet-hadoop's footer
@@ -54,6 +76,7 @@ def test_bloom_filters_physically_written(spark, ingested, tmp_path):
     assert "org_name" not in with_bloom  # only the configured columns pay the space
 
 
+@needs_samples
 def test_latest_by_key_dedup(spark, ingested):
     from parsedmarc_go_spark.storage import latest_by_key
 
@@ -65,6 +88,7 @@ def test_latest_by_key_dedup(spark, ingested):
     assert len(ids) < ingested.aggregate_reports.count()
 
 
+@needs_samples
 def test_summaries(spark, ingested):
     from parsedmarc_go_spark.storage import compliance_summary, daily_summary, source_ip_summary
 
@@ -79,6 +103,7 @@ def test_summaries(spark, ingested):
     assert ds.filter(F.col("aligned_messages") > F.col("total_messages")).count() == 0
 
 
+@needs_samples
 @pytest.mark.slow  # >10 s wall: excluded from the default lane (run -m "")
 def test_stream_matches_batch(spark, ingested, tmp_path):
     """Batch/stream parity (SURVEY §5.2 item 4): one availableNow pass
@@ -111,18 +136,13 @@ def test_stream_matches_batch(spark, ingested, tmp_path):
     assert rejects.count() == 3
 
 
-def test_stream_batch_replay_is_idempotent(spark, tmp_path):
+def test_stream_batch_replay_is_idempotent(spark, payload_batch, tmp_path):
     """ADVICE r1: a crash between foreachBatch's five writes replays the
     whole batch on restart — re-running the SAME batch_id must replace
     its own output, not append duplicates."""
     from parsedmarc_go_spark.streaming.daemon import make_batch_processor, read_stream_table
 
-    batch = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(os.path.join(SAMPLES, "aggregate"))
-        .select("path", "length", "content")
-    )
+    batch = payload_batch
     out = str(tmp_path / "out")
     proc = make_batch_processor(out)
     proc(batch, 0)
@@ -144,7 +164,7 @@ def test_stream_batch_replay_is_idempotent(spark, tmp_path):
     )
 
 
-def test_crash_between_table_writes_replays_clean(spark, tmp_path, monkeypatch):
+def test_crash_between_table_writes_replays_clean(spark, payload_batch, tmp_path, monkeypatch):
     """The exactly-once claim, under the failure it is designed for: the
     daemon dies AFTER table 2 of the batch's 6 table writes, the
     checkpointed source replays the batch with the SAME batch_id on
@@ -153,12 +173,7 @@ def test_crash_between_table_writes_replays_clean(spark, tmp_path, monkeypatch):
     from parsedmarc_go_spark.streaming import daemon
     from parsedmarc_go_spark.streaming.daemon import make_batch_processor, read_stream_table
 
-    batch = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(os.path.join(SAMPLES, "aggregate"))
-        .select("path", "length", "content")
-    )
+    batch = payload_batch
     def table_counts(out: str) -> dict[str, int]:
         # empty frames write no partition files under partitionBy, so an
         # all-rejected family's table dir is unreadable-by-design: count 0
@@ -200,18 +215,13 @@ def test_crash_between_table_writes_replays_clean(spark, tmp_path, monkeypatch):
     assert got == expected, f"replay after partial commit diverged: {expected} -> {got}"
 
 
-def test_batch_processor_publishes_cumulative_metrics(spark, tmp_path):
+def test_batch_processor_publishes_cumulative_metrics(spark, payload_batch, tmp_path):
     """The daemon's per-batch counters are cumulative (like the
     reference's in-process Prometheus counters, metrics.go:24-179) and
     published atomically for the receiver's /metrics bridge."""
     from parsedmarc_go_spark.streaming.daemon import make_batch_processor
 
-    batch = (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(os.path.join(SAMPLES, "aggregate"))
-        .select("path", "length", "content")
-    )
+    batch = payload_batch
     mpath = str(tmp_path / "metrics.prom")
     proc = make_batch_processor(str(tmp_path / "out"), metrics_path=mpath)
     proc(batch, 0)
@@ -258,6 +268,7 @@ def test_bucketed_join_has_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_orders")
 
 
+@needs_samples
 def test_compact_table(spark, ingested, tmp_path):
     """Streaming micro-batches leave many small files; compaction
     rewrites to the computed file count with identical content."""
@@ -276,6 +287,7 @@ def test_compact_table(spark, ingested, tmp_path):
     assert spark.read.parquet(out).count() == ingested.aggregate_records.count()
 
 
+@needs_samples
 def test_compact_landing_row_identity_and_fewer_files(spark, tmp_path):
     """SCALE.md's binaryFile small-file trade-off, executed: compact the
     raw landing zone into monthly parquet, prove (1) many files became

@@ -233,64 +233,6 @@ def test_stream_pipeline_budget_parity_in_hash_order(spark, tmp_path):
     assert stream == batch
 
 
-def test_stream_pipeline_neardup_collision_divergence_is_extra_drop(spark, tmp_path):
-    """The documented near-dup divergence, pinned in its exact
-    direction: a cross-trigger pair whose true Jaccard sits BELOW the
-    threshold (batch keeps both — minhash_lsh_pairs verifies) can
-    still band-collide with retained history and drop in the stream
-    (history stores band keys, not text, so there is nothing to
-    verify against). Same corpus co-resident in ONE trigger must
-    match batch exactly."""
-    from parsedmarc_go_spark.operators.curation import curation_pipeline
-    from parsedmarc_go_spark.operators.dedup import minhash_band_signatures
-
-    # 3-5 char tokens: mean word len 3.83 sits inside the gate's
-    # [3, 4.5] quality window, so both docs reach the near-dup stage
-    base = [f"tk{j}" for j in range(60)]
-    mid = list(base)
-    # perturb enough positions that jaccard < 0.7 but bands still collide
-    for p in (5, 15, 25, 35, 45, 55):
-        mid[p] = f"xk{p}"
-    a_text, b_text = " ".join(base), " ".join(mid)
-    docs = spark.createDataFrame(
-        [(1, "s", 400, a_text), (2, "s", 400, b_text)],
-        "doc_id long, source string, n_chars long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(10_000, "sb", 10, " ".join(f"b{j}" for j in range(60)))],
-        "doc_id long, source string, n_chars long, text string",
-    )
-    # preconditions: below threshold (batch keeps both), bands collide
-    from parsedmarc_go_spark.operators.dedup import ngram_jaccard_pairs
-
-    j = ngram_jaccard_pairs(docs, threshold=0.0).collect()
-    assert j and j[0].jaccard < 0.7, j
-    sigs = minhash_band_signatures(docs, "doc_id").select(
-        "doc", F.concat_ws(":", "band", "sig").alias("ph")
-    )
-    collisions = sigs.groupBy("ph").count().filter(F.col("count") > 1).count()
-    assert collisions > 0, "fixture must band-collide to pin the divergence"
-
-    big = 10**12
-    batch = {
-        r.doc_id: r.fate
-        for r in curation_pipeline(docs, bench, budget=big, **_PIPE_KW).collect()
-    }
-    assert batch == {1: "kept", 2: "kept"}
-    # co-resident: stream matches batch (within-trigger pairs verify)
-    one, *_ = _stream_fates(
-        spark, tmp_path, docs, bench, [docs], tag="_co", budget=big, **_PIPE_KW
-    )
-    assert one == batch
-    # cross-trigger: the collision drops doc 2 — the extra-drop direction
-    two, *_ = _stream_fates(
-        spark, tmp_path, docs, bench,
-        [docs.filter(F.col("doc_id") == 1), docs.filter(F.col("doc_id") == 2)],
-        tag="_split", budget=big, **_PIPE_KW,
-    )
-    assert two == {1: "kept", 2: "near_dup"}
-
-
 def test_stream_pipeline_survives_empty_stage_batches(spark, tmp_path):
     """Round-13 review: a PARTITIONED write of an empty frame creates a
     file-less directory that UNABLE_TO_INFER_SCHEMA-poisons every
@@ -417,10 +359,10 @@ def test_stream_pipeline_infers_shard_schema_not_benchmarks(spark, tmp_path):
 def test_stream_pipeline_verified_mode_is_batch_exact_on_divergence_fixture(
     spark, tmp_path
 ):
-    """Round 14: verify_near_dups=True must erase the r13 divergence —
-    the same sub-threshold band-colliding pair that the greedy mode
-    drops cross-trigger (test above) is exact-Jaccard-verified against
-    the stored shingle sets and KEPT, matching batch bit-for-bit."""
+    """A sub-threshold pair whose bands collide (the fixture of the
+    earlier greedy mode's pinned divergence, which dropped doc 2
+    cross-trigger) is exact-Jaccard-verified against the stored
+    shingle sets and KEPT, matching batch bit-for-bit."""
     from parsedmarc_go_spark.operators.curation import curation_pipeline
 
     base = [f"tk{j}" for j in range(60)]
@@ -435,6 +377,18 @@ def test_stream_pipeline_verified_mode_is_batch_exact_on_divergence_fixture(
         [(10_000, "sb", 10, " ".join(f"b{j}" for j in range(60)))],
         "doc_id long, source string, n_chars long, text string",
     )
+    # preconditions: below threshold (batch keeps both), bands collide
+    from parsedmarc_go_spark.operators.dedup import (
+        minhash_band_signatures,
+        ngram_jaccard_pairs,
+    )
+
+    j = ngram_jaccard_pairs(docs, threshold=0.0).collect()
+    assert j and j[0].jaccard < 0.7, j
+    sigs = minhash_band_signatures(docs, "doc_id").select(
+        "doc", F.concat_ws(":", "band", "sig").alias("ph")
+    )
+    assert sigs.groupBy("ph").count().filter(F.col("count") > 1).count() > 0
     big = 10**12
     batch = {
         r.doc_id: r.fate
@@ -444,9 +398,9 @@ def test_stream_pipeline_verified_mode_is_batch_exact_on_divergence_fixture(
     two, *_ = _stream_fates(
         spark, tmp_path, docs, bench,
         [docs.filter(F.col("doc_id") == 1), docs.filter(F.col("doc_id") == 2)],
-        tag="_ver", budget=big, verify_near_dups=True, **_PIPE_KW,
+        tag="_ver", budget=big, **_PIPE_KW,
     )
-    assert two == batch  # greedy mode pins {1: kept, 2: near_dup} above
+    assert two == batch
 
 
 def test_stream_pipeline_verified_mode_chain_parity(spark, tmp_path):
@@ -454,7 +408,7 @@ def test_stream_pipeline_verified_mode_chain_parity(spark, tmp_path):
     the lower partner was itself dropped — the verified stores keep
     dropped docs' bands and shingles so a cross-trigger chain (1,2),
     (2,3) with J(1,3) below threshold still drops 3 (its only partner,
-    2, died in trigger 1). The greedy survivor-only store cannot see
+    2, died in trigger 1). A store of survivors only could not see
     this pair."""
     from parsedmarc_go_spark.operators.curation import curation_pipeline
 
@@ -488,117 +442,46 @@ def test_stream_pipeline_verified_mode_chain_parity(spark, tmp_path):
     stream, *_ = _stream_fates(
         spark, tmp_path, docs, bench,
         [docs.filter(F.col("doc_id") <= 2), docs.filter(F.col("doc_id") == 3)],
-        tag="_chain", budget=big, verify_near_dups=True, **_PIPE_KW,
+        tag="_chain", budget=big, **_PIPE_KW,
     )
     assert stream == batch
 
 
-def test_stream_pipeline_refuses_near_dup_mode_toggle(spark, tmp_path):
-    """Round-14 review: the greedy and verified near-dup modes keep
-    history in DISJOINT substores (minhash vs minhash_docs+shingles),
-    so restarting an existing store with verify_near_dups toggled
-    would silently read EMPTY history and wave every cross-trigger
-    near-duplicate of the earlier batches through. The store pins its
-    mode on first use (the batch checkpoint-manifest idiom) and a
-    toggled restart raises instead of forgetting."""
+def test_stream_pipeline_refuses_greedy_era_store(spark, tmp_path):
+    """The near-dup stage is batch-exact only: its history is the
+    ``minhash_docs`` + ``shingles`` stores. A store_dir from the earlier
+    greedy mode keeps survivor band keys under ``minhash`` instead,
+    which cannot be verified — resuming on it would silently probe
+    empty near-dup history, so the processor refuses it. A store from
+    the verified mode, whose ``pipeline_mode`` sidecar is now unused,
+    resumes."""
     import pytest
 
     from parsedmarc_go_spark.streaming.curation import (
         make_curation_pipeline_processor,
     )
+    from parsedmarc_go_spark.streaming.dedup import _write_store_meta
 
     corpus, bench = _pipeline_inputs(spark)
-    shard = corpus.filter(F.col("doc_id") < 200)
+    first = corpus.filter(F.col("doc_id") < 200)
+    second = corpus.filter(F.col("doc_id") >= 200)
+
+    greedy = str(tmp_path / "greedy_store")
+    _write_store_meta(spark, os.path.join(greedy, "minhash"), 64)
+    proc = make_curation_pipeline_processor(
+        str(tmp_path / "out_g"), greedy, bench, **_PIPE_KW
+    )
+    with pytest.raises(ValueError, match="greedy-mode 'minhash'"):
+        proc(first, 0)
+    assert not os.path.exists(str(tmp_path / "out_g"))  # nothing written
+
+    # a verified-era store: same substores plus the old mode sidecar
+    store = str(tmp_path / "store")
     out = str(tmp_path / "out")
-    store = str(tmp_path / "store")
-
-    greedy = make_curation_pipeline_processor(
-        out, store, bench, verify_near_dups=False, **_PIPE_KW
-    )
-    greedy(shard, 0)
-
-    flipped = make_curation_pipeline_processor(
-        out, store, bench, verify_near_dups=True, **_PIPE_KW
-    )
-    with pytest.raises(ValueError, match="verify_near_dups"):
-        flipped(corpus.filter(F.col("doc_id") >= 200), 1)
-
-    # the SAME mode resumes fine (restart parity untouched)
-    resumed = make_curation_pipeline_processor(
-        out, store, bench, verify_near_dups=False, **_PIPE_KW
-    )
-    resumed(corpus.filter(F.col("doc_id") >= 200), 1)
-
-
-def test_stream_pipeline_mode_inferred_for_legacy_store(spark, tmp_path):
-    """A store created BEFORE the pipeline_mode sidecar existed must
-    not be blind-pinned to whatever flag the restart passes — the
-    prior mode is inferred from which near-dup substores hold state
-    (greedy writes `minhash`; verified writes minhash_docs+shingles),
-    and a conflicting restart refuses (round-14 review)."""
-    import shutil
-
-    import pytest
-
-    from parsedmarc_go_spark.streaming.curation import (
-        make_curation_pipeline_processor,
-    )
-
-    corpus, bench = _pipeline_inputs(spark)
-    shard = corpus.filter(F.col("doc_id") < 200)
-    out = str(tmp_path / "out")
-    store = str(tmp_path / "store")
-
-    greedy = make_curation_pipeline_processor(
-        out, store, bench, verify_near_dups=False, **_PIPE_KW
-    )
-    greedy(shard, 0)
-    # simulate a pre-r14 store: the mode sidecar does not exist yet
-    shutil.rmtree(os.path.join(store, "pipeline_mode"))
-
-    flipped = make_curation_pipeline_processor(
-        out, store, bench, verify_near_dups=True, **_PIPE_KW
-    )
-    with pytest.raises(ValueError, match="substores show it was used"):
-        flipped(corpus.filter(F.col("doc_id") >= 200), 1)
-
-    # the matching mode re-pins and resumes
-    resumed = make_curation_pipeline_processor(
-        out, store, bench, verify_near_dups=False, **_PIPE_KW
-    )
-    resumed(corpus.filter(F.col("doc_id") >= 200), 1)
-    assert os.path.exists(os.path.join(store, "pipeline_mode"))
-
-
-def test_stream_pipeline_mode_pin_first_run_race_reads_back(spark, tmp_path):
-    """ADVICE r14: two racing FIRST runs with different
-    verify_near_dups flags must not both proceed. The pin now writes
-    under a per-attempt UNIQUE tmp name and validates by READ-BACK
-    after the rename (the batch manifest contract), so whichever
-    sidecar lands is the authority and the run whose mode it does not
-    pin refuses — previously a fixed `.tmp` path let run A rename run
-    B's mode into place and proceed believing its own was pinned."""
-    import pytest
-
-    from parsedmarc_go_spark.streaming.curation import _pin_pipeline_mode
-
-    store = str(tmp_path / "store")
-
-    def concurrent_winner():
-        # a concurrent first run lands its (opposite-mode) sidecar in
-        # the window between our no-sidecar check and our rename
-        _pin_pipeline_mode(spark, store, verify_near_dups=True)
-
-    with pytest.raises(ValueError, match="concurrently pinned"):
-        _pin_pipeline_mode(
-            spark, store, verify_near_dups=False, _race_hook=concurrent_winner
-        )
-
-    # the winner's pin survived the race: its mode proceeds, the
-    # loser's still refuses through the normal existing-sidecar path
-    _pin_pipeline_mode(spark, store, verify_near_dups=True)
-    with pytest.raises(ValueError, match="was created with"):
-        _pin_pipeline_mode(spark, store, verify_near_dups=False)
-    # and no tmp debris survives the lost race
-    debris = [p for p in os.listdir(store) if ".tmp-" in p]
-    assert debris == []
+    make_curation_pipeline_processor(out, store, bench, **_PIPE_KW)(first, 0)
+    spark.createDataFrame([(True,)], "verify_near_dups boolean").coalesce(
+        1
+    ).write.json(os.path.join(store, "pipeline_mode"))
+    make_curation_pipeline_processor(out, store, bench, **_PIPE_KW)(second, 1)
+    fates = spark.read.parquet(os.path.join(out, "pipeline_fates")).collect()
+    assert len(fates) == corpus.count()

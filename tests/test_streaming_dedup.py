@@ -139,9 +139,10 @@ def test_stream_document_mode_matches_exact_dedup(spark, tmp_path):
 
 
 def test_fingerprint_store_compaction(spark, tmp_path):
-    """Folding old batch partitions into the -1 base preserves digest
-    membership, shrinks file count, and keeps the LATEST batch's replay
-    idempotent (only old, never-replayable batches are folded)."""
+    """Folding old batch partitions into one run (the first, ``-1``)
+    preserves digest membership, shrinks file count, and keeps the
+    LATEST batch's replay idempotent (only old, never-replayable
+    batches are folded)."""
     from parsedmarc_go_spark.streaming.daemon import read_stream_table
     from parsedmarc_go_spark.streaming.dedup import (
         compact_fingerprint_store,
@@ -178,9 +179,8 @@ def test_fingerprint_store_compaction(spark, tmp_path):
 
 
 def test_fingerprint_store_compaction_leveled(spark, tmp_path):
-    """Round-16 (VERDICT r15 task 5): the generational fold. The flat
-    compactor rewrites the whole store each fold; the leveled one folds
-    old batches into a NEW run and rewrites the base only when the
+    """Round-16 (VERDICT r15 task 5): the generational fold. Old
+    batches fold into a NEW run and the base is rewritten only when the
     size ratio triggers — here the ratio is set low so the base run
     must NOT be rewritten on the second compaction (its files' mtimes
     prove it), while membership, replay idempotence, and crash
@@ -190,7 +190,7 @@ def test_fingerprint_store_compaction_leveled(spark, tmp_path):
 
     from parsedmarc_go_spark.streaming.daemon import read_stream_table
     from parsedmarc_go_spark.streaming.dedup import (
-        compact_fingerprint_store_leveled,
+        compact_fingerprint_store,
         make_dedup_processor,
         read_fingerprints,
     )
@@ -204,7 +204,7 @@ def test_fingerprint_store_compaction_leveled(spark, tmp_path):
 
     before = {r["ph"] for r in read_fingerprints(spark, store).collect()}
     st1: dict = {}
-    fb, fa = compact_fingerprint_store_leveled(
+    fb, fa = compact_fingerprint_store(
         spark, store, keep_last=1, level_ratio=0.5, stats=st1
     )
     assert fa < fb
@@ -233,7 +233,7 @@ def test_fingerprint_store_compaction_leveled(spark, tmp_path):
 
     before2 = {r["ph"] for r in read_fingerprints(spark, store).collect()}
     st2: dict = {}
-    compact_fingerprint_store_leveled(
+    compact_fingerprint_store(
         spark, store, keep_last=1, level_ratio=0.5, stats=st2
     )
     assert not _os.path.exists(orphan), "orphan run must be GC'd"
@@ -253,7 +253,7 @@ def test_fingerprint_store_compaction_leveled(spark, tmp_path):
 
     # and a high ratio triggers the base merge: everything folds to one
     st3: dict = {}
-    compact_fingerprint_store_leveled(
+    compact_fingerprint_store(
         spark, store, keep_last=0, level_ratio=3.0, stats=st3, final=True
     )
     assert len(st3["runs"]) == 1
@@ -325,11 +325,11 @@ def test_probe_store_plan_prunes_and_never_shuffles_store(spark, tmp_path):
 
 
 def test_compaction_base_partition_written_by_many_tasks(spark, tmp_path):
-    """The folded base partition is unbounded, so it must be rewritten
-    by ~total_bytes/target_file_mb tasks — not ONE (the r9 single-task
-    fold hashed on the constant -1). With a tiny target_file_mb the
-    base partition's bucket directories must hold multiple files, and
-    membership is untouched."""
+    """A folded run partition is unbounded, so it must be written by
+    ~bytes/target_file_mb tasks — not ONE (the r9 single-task fold
+    hashed on the constant -1). With a tiny target_file_mb the run's
+    bucket directories must hold multiple files, and membership is
+    untouched."""
     import glob
 
     from parsedmarc_go_spark.streaming.dedup import (
@@ -975,15 +975,14 @@ def test_stream_semdedup_chain_divergence_bound(spark, tmp_path):
 def test_leveled_compaction_noop_on_metadata_only_store(spark, tmp_path):
     """A store whose creation pinned meta but whose batches appended
     zero digests (empty-frame appends are skipped) has no fingerprints
-    table — the leveled compactor must no-op, not crash on the missing
-    path."""
+    table — the compactor must no-op, not crash on the missing path."""
     from parsedmarc_go_spark.streaming.dedup import (
         _write_store_meta,
-        compact_fingerprint_store_leveled,
+        compact_fingerprint_store,
     )
 
     store = str(tmp_path / "store")
     _write_store_meta(spark, store, 4)
     st: dict = {}
-    assert compact_fingerprint_store_leveled(spark, store, stats=st) == (0, 0)
+    assert compact_fingerprint_store(spark, store, stats=st) == (0, 0)
     assert st["steps"] == 0 and st["bytes_rewritten"] == 0
