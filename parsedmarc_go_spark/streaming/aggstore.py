@@ -47,7 +47,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from parsedmarc_go_spark.storage import _parquet_file_stats, swap_directory
-from parsedmarc_go_spark.streaming.daemon import _overwrite_partitions, _start_stream
+from parsedmarc_go_spark.streaming.daemon import (
+    _overwrite_partitions,
+    _start_stream,
+    _with_batch_id,
+)
 
 COUNT_TABLE = "counts"
 DEFAULT_COUNT_BUCKETS = 64
@@ -81,9 +85,7 @@ def make_count_processor(
         partial = batch.groupBy(*key_cols).agg(agg)
         bucket = F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
         _overwrite_partitions(
-            partial.withColumn("__batch_id", F.lit(batch_id)).withColumn(
-                "__bucket", bucket
-            ),
+            _with_batch_id(partial, batch_id).withColumn("__bucket", bucket),
             _count_path(store_dir),
             "__batch_id",
             "__bucket",

@@ -41,6 +41,7 @@ from parsedmarc_go_spark.storage import hadoop_fs
 from parsedmarc_go_spark.streaming.daemon import (
     _overwrite_partitions,
     _start_stream,
+    _with_batch_id,
     _write_table,
 )
 
@@ -515,7 +516,7 @@ def make_curation_pipeline_processor(
         # later read (see streaming/dedup.py::_write_store)
         if not partial.isEmpty():
             _overwrite_partitions(
-                partial.withColumn("__batch_id", F.lit(batch_id)),
+                _with_batch_id(partial, batch_id),
                 _budget_path(store_dir),
                 "__batch_id",
             )

@@ -23,8 +23,18 @@ bookkeeping column via `read_stream_table`.
 This module owns the streaming commit protocol every stage shares:
 `_overwrite_partitions` is the one per-batch write (it carries its own
 dynamic overwrite mode, so no caller touches the session's
-`partitionOverwriteMode`), and `_start_stream` is the one
+`partitionOverwriteMode`), `_with_batch_id` is the one way a batch's
+rows get their `__batch_id`, and `_start_stream` is the one
 readStream → foreachBatch → checkpoint → trigger starter.
+
+The batch id goes into the plan as a STRING literal. Spark's code
+generator writes an integer literal into the generated Java source, so
+an integer id made every micro-batch compile its write stages anew
+(about 16 classes a batch, never reused) and pushed the dashboards'
+classes out of the shared codegen cache. A string literal is held in
+the compiled class's reference array instead, so one class serves every
+batch. The partition directory is `__batch_id=N` either way, and reads
+infer the column back as an integer.
 
 Batch/stream parity is structural: foreachBatch runs the identical
 post-extraction DAG the batch path uses (ingest.parse_extracted), so
@@ -67,14 +77,19 @@ def _overwrite_partitions(df: DataFrame, path: str, *part_cols: str) -> None:
     )
 
 
+def _with_batch_id(df: DataFrame, batch_id: int) -> DataFrame:
+    """``df`` tagged with its ``__batch_id`` partition value, as a
+    string literal so the generated code does not depend on the id (see
+    the module docstring)."""
+    return df.withColumn("__batch_id", F.lit(str(batch_id)))
+
+
 def _write_table(df: DataFrame, out_dir: str, name: str, batch_id: int) -> None:
     """One idempotent table commit scoped to THIS batch's __batch_id
     partition. Module-level (not a closure) so the crash test can
     fail-inject between the five table writes."""
     _overwrite_partitions(
-        df.withColumn("__batch_id", F.lit(batch_id)),
-        os.path.join(out_dir, name),
-        "__batch_id",
+        _with_batch_id(df, batch_id), os.path.join(out_dir, name), "__batch_id"
     )
 
 

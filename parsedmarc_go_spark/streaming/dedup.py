@@ -103,6 +103,7 @@ from parsedmarc_go_spark.storage import _parquet_file_stats, hadoop_fs, swap_dir
 from parsedmarc_go_spark.streaming.daemon import (
     _overwrite_partitions,
     _start_stream,
+    _with_batch_id,
     _write_table,
 )
 
@@ -538,7 +539,7 @@ def _write_store(
     overwriting zero partitions replaces nothing."""
     if df.isEmpty():
         return
-    out = df.withColumn("__batch_id", F.lit(batch_id))
+    out = _with_batch_id(df, batch_id)
     part_cols = ["__batch_id"]
     if n_buckets:
         out = out.withColumn("__bucket", _bucket_expr(n_buckets, bucket_col))
@@ -688,9 +689,7 @@ def _process_semdedup_batch(
     )
     _write_table(survivors.drop("cell"), out_dir, "docs_deduped", batch_id)
     _overwrite_partitions(
-        survivors.select(id_col, vec_col, "cell").withColumn(
-            "__batch_id", F.lit(batch_id)
-        ),
+        _with_batch_id(survivors.select(id_col, vec_col, "cell"), batch_id),
         vec_path,
         "__batch_id",
         "cell",
@@ -1032,7 +1031,7 @@ def _write_run_partition(
     path = os.path.join(store_dir, STORE_TABLE)
     tmp = path.rstrip("/") + f".run{run_id}.tmp"
     n_tasks = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
-    out = source.withColumn("__batch_id", F.lit(int(run_id)))
+    out = _with_batch_id(source, run_id)
     part_cols = ["__batch_id"] + (
         ["__bucket"] if "__bucket" in source.columns else []
     )

@@ -23,6 +23,37 @@ def ranked(df) -> list[tuple[int, float]]:
     return sorted(((r.vec_id, r.cosine_sim) for r in df.collect()), key=lambda p: (-p[1], p[0]))
 
 
+def codegen_compiles(spark) -> int:
+    """How many classes Spark's code generator has compiled in this JVM
+    so far: the sample count of its compile-time histogram, which is
+    recorded on each codegen cache miss. A guard reads it before and
+    after the work it checks."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+@pytest.fixture(scope="session")
+def payload_dir(tmp_path_factory) -> str:
+    """A small landing directory built here, no corpus needed: one
+    aggregate report as plain XML, a gzip copy of it, and one malformed
+    file."""
+    import gzip
+
+    from test_xml_defaults import MINIMAL
+
+    d = tmp_path_factory.mktemp("payloads")
+    (d / "minimal.xml").write_bytes(MINIMAL)
+    (d / "minimal.xml.gz").write_bytes(gzip.compress(MINIMAL))
+    (d / "broken.xml").write_bytes(b"<feedback><report_metadata>truncated")
+    return str(d)
+
+
+@pytest.fixture(scope="session")
+def payload_batch(spark, payload_dir):
+    """``payload_dir`` as one of the daemon's binaryFile micro-batches."""
+    return spark.read.format("binaryFile").load(payload_dir).select("path", "length", "content")
+
+
 @pytest.fixture(scope="session")
 def spark():
     from parsedmarc_go_spark.session import get_spark

@@ -25,12 +25,9 @@ from parsedmarc_go_spark.plans.dashboards import (
     register_views,
     run_dashboard_query,
 )
+from tests.conftest import codegen_compiles
 
 SAMPLES = "/root/reference/samples"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.isdir(SAMPLES), reason="reference sample corpus not available"
-)
 
 # anchor inside the corpus' date spread: newest aggregate sample dates
 # are 2024-06; forensic arrival dates cluster in 2019; the newest TLS
@@ -55,6 +52,8 @@ def _as_of(name: str) -> str:
 def views(spark):
     from parsedmarc_go_spark.sources.ingest import ingest
 
+    if not os.path.isdir(SAMPLES):
+        pytest.skip("reference sample corpus not available")
     res = ingest(spark, SAMPLES, as_of=INGEST_AS_OF)
     register_views(
         spark,
@@ -208,3 +207,44 @@ def test_oracle_redialect_asserts_when_rewrite_misses():
             dashboards.dashboard_oracle_sql("__deep_nesting_probe", "2024-01-01 00:00:00")
     finally:
         del dashboards.DASHBOARD_QUERIES["__deep_nesting_probe"]
+
+
+# ------------------------------------------------------- compile-once guard
+# Last in the module: it registers the payload tables under the view
+# names the corpus tests above query.
+
+# six days after the payload report's date range, inside every window
+PAYLOAD_AS_OF = "2023-11-20 00:00:00"
+
+
+@pytest.fixture(scope="module")
+def payload_views(spark, payload_dir, tmp_path_factory):
+    """The five tables ingested from the in-repo payloads, stored as
+    parquet and registered as the panels' views."""
+    from parsedmarc_go_spark.sources.ingest import ingest
+
+    res = ingest(spark, payload_dir, as_of=INGEST_AS_OF)
+    base = tmp_path_factory.mktemp("payload_views")
+    tables = {}
+    for name in VIEW_NAMES:
+        path = str(base / name)
+        getattr(res, name.removeprefix("dmarc_")).write.parquet(path)
+        tables[name] = spark.read.parquet(path)
+    register_views(spark, tables)
+    return spark
+
+
+def test_warm_refresh_compiles_nothing(payload_views):
+    """A second refresh of every panel compiles no class: the session's
+    codegen cache holds a whole refresh. With Spark's default of 100
+    entries, each refresh evicted its classes before they came round
+    again and compiled them all anew (about 150 a pass on these tables)."""
+
+    def refresh():
+        for name in DASHBOARD_QUERIES:
+            run_dashboard_query(payload_views, name, as_of=PAYLOAD_AS_OF).collect()
+
+    refresh()
+    before = codegen_compiles(payload_views)
+    refresh()
+    assert codegen_compiles(payload_views) - before == 0

@@ -16,26 +16,6 @@ needs_samples = pytest.mark.skipif(
 
 
 @pytest.fixture(scope="module")
-def payload_batch(spark, tmp_path_factory):
-    """A small binaryFile batch built here, no corpus needed: one
-    aggregate report as plain XML, a gzip copy of it, and one malformed
-    file."""
-    import gzip
-
-    from test_xml_defaults import MINIMAL
-
-    d = tmp_path_factory.mktemp("payloads")
-    (d / "minimal.xml").write_bytes(MINIMAL)
-    (d / "minimal.xml.gz").write_bytes(gzip.compress(MINIMAL))
-    (d / "broken.xml").write_bytes(b"<feedback><report_metadata>truncated")
-    return (
-        spark.read.format("binaryFile")
-        .load(str(d))
-        .select("path", "length", "content")
-    )
-
-
-@pytest.fixture(scope="module")
 def ingested(spark):
     from parsedmarc_go_spark.sources.ingest import ingest
 
@@ -134,6 +114,39 @@ def test_stream_matches_batch(spark, ingested, tmp_path):
     assert read_stream_table(spark, out, "forensic_reports").count() == 4
     rejects = read_stream_table(spark, out, "rejects")
     assert rejects.count() == 3
+
+
+def test_stream_matches_batch_on_payloads(spark, payload_dir, tmp_path):
+    """Batch/stream parity in the default lane: one availableNow pass of
+    the daemon over the in-repo payloads, two micro-batches, stores the
+    rows ``ingest()`` returns, table by table. A table both sides leave
+    empty has no ``__batch_id`` partition on the stream side."""
+    import glob
+
+    from parsedmarc_go_spark.sources.ingest import ingest
+    from parsedmarc_go_spark.streaming.daemon import STREAM_TABLES, read_stream_table, stream_ingest
+
+    as_of = "2024-09-01 00:00:00"
+    out = str(tmp_path / "out")
+    q = stream_ingest(
+        spark, payload_dir, out, str(tmp_path / "ckpt"),
+        available_now=True, max_files_per_trigger=2, as_of=as_of,
+    )
+    try:
+        assert q.awaitTermination(120), "availableNow stream did not finish"
+    finally:
+        q.stop()
+    assert q.exception() is None
+    parts = {os.path.basename(p) for p in glob.glob(os.path.join(out, "*", "__batch_id=*"))}
+    assert parts == {"__batch_id=0", "__batch_id=1"}
+    batch = ingest(spark, payload_dir, as_of=as_of)
+    for name in STREAM_TABLES:
+        expected = getattr(batch, name)
+        if not glob.glob(os.path.join(out, name, "__batch_id=*")):
+            assert expected.isEmpty(), name
+            continue
+        got = read_stream_table(spark, out, name).select(*expected.columns)
+        assert sorted(map(str, got.collect())) == sorted(map(str, expected.collect())), name
 
 
 def test_stream_batch_replay_is_idempotent(spark, payload_batch, tmp_path):

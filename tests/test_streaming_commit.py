@@ -1,9 +1,10 @@
 """The streaming commit protocol (streaming/daemon.py): every per-batch
 write replaces exactly its own ``__batch_id`` partition under the
-session's default STATIC overwrite mode, processors leave the session
-conf alone, a replayed batch is a no-op, and the one fingerprint
-compactor takes every on-disk store layout. Small hand-built inputs,
-so this runs in the default lane."""
+session's default STATIC overwrite mode, a new batch id reuses the
+previous batch's compiled classes, processors leave the session conf
+alone, a replayed batch is a no-op, and the one fingerprint compactor
+takes every on-disk store layout. Small hand-built inputs, so this runs
+in the default lane."""
 
 from __future__ import annotations
 
@@ -11,6 +12,8 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+
+from tests.conftest import codegen_compiles
 
 MODE_KEY = "spark.sql.sources.partitionOverwriteMode"
 
@@ -31,9 +34,23 @@ def _docs(spark, ids):
     )
 
 
+def _digests(spark, n, salt):
+    return spark.createDataFrame([(f"{salt}-{i:04d}",) for i in range(n)], "ph string")
+
+
 def test_batch_writes_keep_earlier_partitions_under_static_mode(spark, tmp_path):
+    """Batch 1's writes keep batch 0's partitions. Read back, the batch
+    id is an integer, and once the compactor folds the older batches
+    into a negative run id, ``__batch_id < 0`` selects exactly their
+    rows."""
     from parsedmarc_go_spark.streaming.daemon import _write_table
-    from parsedmarc_go_spark.streaming.dedup import STORE_TABLE, _write_store
+    from parsedmarc_go_spark.streaming.dedup import (
+        STORE_TABLE,
+        _write_store,
+        clear_meta_cache,
+        compact_fingerprint_store,
+        read_fingerprints,
+    )
 
     assert spark.conf.get(MODE_KEY).upper() == "STATIC"
     df = spark.createDataFrame([("a",), ("b",)], "ph string")
@@ -41,11 +58,52 @@ def test_batch_writes_keep_earlier_partitions_under_static_mode(spark, tmp_path)
     store = str(tmp_path / "store")
     for b in (0, 1):
         _write_table(df, out, "t", b)
-        _write_store(df, store, b, 4)
+        _write_store(_digests(spark, 2, f"b{b}"), store, b, 4)
     assert _batch_ids(os.path.join(out, "t")) == [0, 1]
     assert _batch_ids(os.path.join(store, STORE_TABLE)) == [0, 1]
-    assert spark.read.parquet(os.path.join(out, "t")).count() == 4
+    table = spark.read.parquet(os.path.join(out, "t"))
+    assert table.count() == 4
+    assert dict(table.dtypes)["__batch_id"] == "int"
     assert spark.read.parquet(os.path.join(store, STORE_TABLE)).count() == 4
+
+    _write_store(_digests(spark, 3, "b2"), store, 2, 4)
+    st: dict = {}
+    compact_fingerprint_store(spark, store, keep_last=1, stats=st)
+    clear_meta_cache()
+    assert st["runs"] and all(r < 0 for r in st["runs"])
+    assert _batch_ids(os.path.join(store, STORE_TABLE)) == sorted(st["runs"] + [2])
+    fps = read_fingerprints(spark, store)
+    assert dict(fps.dtypes)["__batch_id"] == "int"
+    folded = _rows(fps.filter(F.col("__batch_id") < 0).select("ph"))
+    assert folded == [("b0-0000",), ("b0-0001",), ("b1-0000",), ("b1-0001",)]
+    assert _rows(fps.filter(F.col("__batch_id") >= 0).select("ph")) == [
+        ("b2-0000",), ("b2-0001",), ("b2-0002",)
+    ]
+
+
+def test_new_batch_id_compiles_no_class(spark, payload_batch, tmp_path):
+    """The daemon's second micro-batch reuses every class its first
+    compiled: the batch id is not written into the generated code. The
+    stored layout is unchanged: one ``__batch_id=N`` directory per batch,
+    read back as an integer, and none for a table the batch left
+    empty."""
+    from parsedmarc_go_spark.streaming.daemon import STREAM_TABLES, make_batch_processor
+
+    out = str(tmp_path / "out")
+    proc = make_batch_processor(out, as_of="2024-09-01 00:00:00")
+    proc(payload_batch, 0)
+    before = codegen_compiles(spark)
+    proc(payload_batch, 1)
+    assert codegen_compiles(spark) - before == 0
+
+    filled = ("aggregate_reports", "aggregate_records", "rejects")
+    for name in STREAM_TABLES:
+        path = os.path.join(out, name)
+        if name in filled:
+            assert _batch_ids(path) == [0, 1], name
+            assert dict(spark.read.parquet(path).dtypes)["__batch_id"] == "int", name
+        else:
+            assert not os.path.exists(path) or _batch_ids(path) == [], name
 
 
 def test_processors_smoke_two_batches_and_replay(spark, tmp_path):
@@ -110,10 +168,6 @@ def test_empty_first_count_batch_leaves_no_store(spark, tmp_path):
     assert _rows(read_counts(spark, store)) == [("a", 2), ("b", 1)]
     compact_count_store(spark, store, keep_last=0)
     assert _rows(read_counts(spark, store)) == [("a", 2), ("b", 1)]
-
-
-def _digests(spark, n, salt):
-    return spark.createDataFrame([(f"{salt}-{i:04d}",) for i in range(n)], "ph string")
 
 
 @pytest.mark.parametrize("layout", ["meta_less", "flat_compacted"])
